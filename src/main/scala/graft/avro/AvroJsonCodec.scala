@@ -9,8 +9,8 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 
-/** Per-executor decode state: schema-id → parsed schema LRU, plus per-thread
-  * cached `DatumReader`/`DatumWriter`s.
+/** Per-executor decode state: schema-id → parsed schema LRU, each entry
+  * carrying its own per-thread `DatumReader`/`DatumWriter`.
   *
   * Two-level cache design mirrors the reference —
   * `SynchronizedCache(LRUCache(capacity))` over the registry client
@@ -22,18 +22,27 @@ import org.apache.avro.io.{DecoderFactory, EncoderFactory}
   * `AvroTransform.java:241-246`; SURVEY.md §4.1).
   *
   * Thread-safety: the schema LRU is a synchronized `LinkedHashMap` in access
-  * order; Avro `DatumReader`s are not guaranteed thread-safe, so they are
-  * cached per-thread (32 hot threads in local[32]; one per core on a real
-  * executor).
+  * order. Codecs stay per-thread (`GenericDatumReader.read` lazily stores
+  * its fast reader in an unsynchronized field) but hang off the schema
+  * entry, so the schema LRU is the only eviction decision: an evicted
+  * entry's codecs become garbage with it.
   */
 final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
+
+  private final class Codec(schema: Schema) {
+    val reader = new GenericDatumReader[AnyRef](schema)
+    val writer = new GenericDatumWriter[AnyRef](schema)
+  }
 
   /** Parsed schema + its serialized JSON, both computed exactly once per
     * (executor, id): `Schema.toString` rebuilds the whole schema JSON, so
     * calling it per record (as the reference effectively does via
     * `schema.toString()` in the envelope) would dominate the envelope
     * cost. */
-  final case class CachedSchema(schema: Schema, json: String)
+  final case class CachedSchema(schema: Schema, json: String) {
+    private[AvroDecoderState] val codec =
+      ThreadLocal.withInitial[Codec](() => new Codec(schema))
+  }
 
   // Canonical LRU (capacity semantics parity with the reference's
   // SynchronizedCache(LRUCache), `AvroTransform.java:108`) + a lock-free
@@ -118,53 +127,21 @@ final class AvroDecoderState(provider: SchemaProvider, capacity: Int) {
     } finally inflight.remove(key)
   }
 
-  def schemaById(id: Int): Schema = cachedSchema(id).schema
-
-  private final class ThreadState {
-    val readers = new java.util.LinkedHashMap[Integer,
-      GenericDatumReader[AnyRef]](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Integer,
-        GenericDatumReader[AnyRef]]): Boolean = size() > capacity
-    }
-    val writers = new java.util.LinkedHashMap[Integer,
-      GenericDatumWriter[AnyRef]](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Integer,
-        GenericDatumWriter[AnyRef]]): Boolean = size() > capacity
-    }
-  }
-
-  private val threadState =
-    ThreadLocal.withInitial[ThreadState](() => new ThreadState)
-
   /** Decode an Avro-binary body (writer schema = reader schema, no
-    * evolution — `AvroTransform.java:241-243`) and re-encode with Avro's
-    * own `JsonEncoder` (non-pretty, `:244-251`). Avro's JSON rendering
-    * (union wrapping, ISO-8859-1 bytes) is kept deliberately for parity
-    * with the golden output (`TransformTest.java:508`). */
-  def avroBinaryToJson(schemaId: Int, body: Array[Byte]): String =
-    decodeToJson(cachedSchema(schemaId), schemaId, body)
-
-  /** Fused decode with a pre-resolved schema entry — one cache lookup per
-    * record for the whole decode+envelope path. */
+    * evolution — `AvroTransform.java:241-243`) with a pre-resolved schema
+    * entry and re-encode with Avro's own `JsonEncoder` (non-pretty,
+    * `:244-251`). Avro's JSON rendering (union wrapping, ISO-8859-1 bytes)
+    * is kept deliberately for parity with the golden output
+    * (`TransformTest.java:508`). `schemaId` is not read: the entry carries
+    * its codecs. */
   def decodeToJson(cached: CachedSchema, schemaId: Int,
       body: Array[Byte]): String = {
-    val schema = cached.schema
-    val ts = threadState.get()
-    var reader = ts.readers.get(Integer.valueOf(schemaId))
-    if (reader == null) {
-      reader = new GenericDatumReader[AnyRef](schema)
-      ts.readers.put(Integer.valueOf(schemaId), reader)
-    }
-    var writer = ts.writers.get(Integer.valueOf(schemaId))
-    if (writer == null) {
-      writer = new GenericDatumWriter[AnyRef](schema)
-      ts.writers.put(Integer.valueOf(schemaId), writer)
-    }
-    val datum = reader.read(null,
+    val codec = cached.codec.get()
+    val datum = codec.reader.read(null,
       DecoderFactory.get().binaryDecoder(body, null))
     val out = new ByteArrayOutputStream(body.length * 2 + 16)
-    val enc = EncoderFactory.get().jsonEncoder(schema, out, false)
-    writer.write(datum, enc)
+    val enc = EncoderFactory.get().jsonEncoder(cached.schema, out, false)
+    codec.writer.write(datum, enc)
     enc.flush()
     out.toString(UTF_8)
   }

@@ -14,13 +14,6 @@ import graft.config.{EngineConfig, ErrorMode}
 final class TypeGateException(msg: String)
     extends IllegalArgumentException(msg)
 
-/** Decoded payload view for introspection pipelines: the three envelope
-  * fields before re-serialization. */
-final case class DecodedPayload(
-    originSchemaId: Int,
-    originMessage: String,
-    originSchema: String)
-
 /** The engine's core pipeline: Confluent-wire-format Avro bytes → decoded
   * self-describing JSON envelope, per configured topic — the Spark-native
   * re-expression of the reference SMT's `apply(R r)` hot path
@@ -41,8 +34,8 @@ final case class DecodedPayload(
   * literal-schema contract cannot express it — SURVEY.md §4.3 #1).
   *
   * Null semantics: null payloads (Kafka tombstones) pass through untouched
-  * (`AvroTransform.java:133-135`, `:168-170`) — the UDFs are null-in/null-out
-  * and `when` keeps the original null column value.
+  * (`AvroTransform.java:133-135`, `:168-170`) — the decode expressions are
+  * null-in/null-out and `when` keeps the original null column value.
   */
 object AvroTransform {
 
@@ -77,15 +70,17 @@ object AvroTransform {
         isKey = true, stripKey = cfg.stripKeyWireHeader))
 
   /** Introspection decoder: envelope fields as a typed struct column
-    * (null on tombstone). Used by verification queries that re-project the
-    * decoded message relationally instead of re-serializing to bytes.
-    * Native expression — no ScalaUDF encoder round-trip. */
+    * (null on tombstone, and in PERMISSIVE mode on a body that does not
+    * decode). Used by verification queries that re-project the decoded
+    * message relationally instead of re-serializing to bytes. Native
+    * expression — no ScalaUDF encoder round-trip. */
   def decodedStruct(cfg: EngineConfig, provider: SchemaProvider)
       (c: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.plans.AvroDecodeStruct(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(c),
-        provider, cfg.schemaCapacity))
+        provider, cfg.schemaCapacity,
+        cfg.errorMode == ErrorMode.Permissive))
 
   /** Analysis-time BinaryType gate (`ConnectSchemaUtil.isBytesSchema` —
     * the reference checks the Connect schema per record and throws
@@ -183,7 +178,8 @@ object AvroTransform {
 
   /** Decoded envelope as queryable columns:
     * `origin_schema_id`, `origin_message`, `origin_schema` (null for
-    * tombstones / non-enabled topics). */
+    * tombstones / non-enabled topics, and in PERMISSIVE mode for bodies
+    * that do not decode). */
   def decoded(df: DataFrame, cfg: EngineConfig,
       provider: SchemaProvider): DataFrame = {
     requireBinary(df, ValueCol, "value")

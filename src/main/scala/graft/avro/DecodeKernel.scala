@@ -4,11 +4,15 @@ import java.io.IOException
 
 import org.apache.avro.AvroRuntimeException
 
-/** Shared per-record decode kernel used by both the ScalaUDF path (v0) and
-  * the native Catalyst expression (M3, `graft.plans.AvroDecodeEnvelope`) —
-  * one implementation of the reference semantics, two execution surfaces.
+/** The per-record decode step shared by the native Catalyst expressions
+  * (`graft.plans.AvroDecodeEnvelope` and `graft.plans.AvroDecodeStruct`):
+  * one implementation of the reference semantics, three output shapes.
   */
 object DecodeKernel {
+
+  /** One decoded record: the frame's schema id, the body rendered as Avro
+    * JSON, and the schema's own JSON. */
+  final case class Decoded(schemaId: Int, json: String, schemaJson: String)
 
   def isDecodeFailure(t: Throwable): Boolean = t match {
     case _: IOException => true // reference catches IOException (`:149`,`:188`)
@@ -17,38 +21,39 @@ object DecodeKernel {
     case _ => false
   }
 
-  /** VALUE-side: wire-parse → decode → value envelope. Permissive mode
-    * forwards original bytes on decode failure (`AvroTransform.java:188-191`);
-    * wire violations always throw (`:173-177`). Null-safe at the caller. */
-  def decodeValue(bytes: Array[Byte], state: AvroDecoderState,
-      permissive: Boolean): Array[Byte] = {
-    val framed = WireFormat.parse(bytes)
-    val cached = state.cachedSchema(framed.schemaId)
-    try {
-      val json = state.decodeToJson(cached, framed.schemaId, framed.body)
-      AvroEnvelope.valueEnvelope(framed.schemaId, json, cached.json)
-    } catch {
-      case t: Throwable if permissive && isDecodeFailure(t) =>
-        state.swallowedErrors.increment()
-        bytes
-    }
-  }
-
-  /** KEY-side: fields inlined + originSchema injected
-    * (`AvroTransform.java:224-229`); `strip=false` reproduces the
-    * unstripped-key reference bug (`:148`, SURVEY.md §7.4). */
-  def decodeKey(bytes: Array[Byte], state: AvroDecoderState,
-      permissive: Boolean, strip: Boolean): Array[Byte] = {
+  /** Wire-parse → schema lookup → decode to JSON. Permissive mode counts a
+    * body that does not decode and returns null (`AvroTransform.java:188-191`);
+    * wire violations (`:173-177`) and lookup failures throw in both modes.
+    * `strip=false` decodes the whole framed payload — the unstripped-key
+    * reference bug (`:148`, SURVEY.md §7.4). Null-safe at the caller. */
+  def decode(bytes: Array[Byte], state: AvroDecoderState,
+      permissive: Boolean, strip: Boolean): Decoded = {
     val framed = WireFormat.parse(bytes)
     val body = if (strip) framed.body else bytes
     val cached = state.cachedSchema(framed.schemaId)
-    try {
-      val json = state.decodeToJson(cached, framed.schemaId, body)
-      AvroEnvelope.keyEnvelope(json, cached.json)
-    } catch {
+    try Decoded(framed.schemaId,
+      state.decodeToJson(cached, framed.schemaId, body), cached.json)
+    catch {
       case t: Throwable if permissive && isDecodeFailure(t) =>
         state.swallowedErrors.increment()
-        bytes
+        null
     }
+  }
+
+  /** VALUE-side envelope; permissive mode forwards the original bytes on
+    * decode failure (`AvroTransform.java:188-191`). */
+  def decodeValue(bytes: Array[Byte], state: AvroDecoderState,
+      permissive: Boolean): Array[Byte] = {
+    val d = decode(bytes, state, permissive, strip = true)
+    if (d == null) bytes
+    else AvroEnvelope.valueEnvelope(d.schemaId, d.json, d.schemaJson)
+  }
+
+  /** KEY-side envelope: fields inlined + originSchema injected
+    * (`AvroTransform.java:224-229`). */
+  def decodeKey(bytes: Array[Byte], state: AvroDecoderState,
+      permissive: Boolean, strip: Boolean): Array[Byte] = {
+    val d = decode(bytes, state, permissive, strip)
+    if (d == null) bytes else AvroEnvelope.keyEnvelope(d.json, d.schemaJson)
   }
 }

@@ -17,7 +17,7 @@ final class WireFormatException(msg: String) extends RuntimeException(msg)
   *
   * Two API layers:
   *  - JVM byte-level helpers ([[frame]]/[[parse]]) used inside the fused
-  *    decode UDF/expression and by test fixtures;
+  *    decode expressions and by test fixtures;
   *  - Column-level parsers built ONLY from codegen'd Spark built-ins
   *    ([[schemaIdCol]]/[[bodyCol]]/[[isFramedCol]]/[[frameCol]]) for
   *    pipelines that want the header without the Avro decode (SURVEY.md

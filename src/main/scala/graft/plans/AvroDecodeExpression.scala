@@ -10,15 +10,14 @@ import graft.avro.{AvroDecoderState, DecodeKernel, SchemaProvider}
   * wire-parse → registry-lookup → Avro-decode → JSON-envelope kernel
   * (SURVEY.md §4.3 #1 / §7.1 M3 — the UDF→Expression promotion).
   *
-  * vs. the v0 ScalaUDF: no `ScalaUDF` wrapper (no catalyst-to-scala
-  * converters, no extra null boxing), and codegen embeds a direct virtual
-  * call via [[doGenCode]] — the expression participates in whole-stage
-  * codegen as a leaf call instead of forcing a fallback projection for the
-  * whole operator subtree. Executor-side state (schema LRU + per-thread
-  * datum readers) is resolved lazily from the JVM-wide registry keyed by
-  * the provider's cache token, exactly like the UDF path — the reference's
-  * two-level cache design (`AvroTransform.java:108-109`) relocated per
-  * executor.
+  * No `ScalaUDF` wrapper (no catalyst-to-scala converters, no extra null
+  * boxing): codegen embeds a direct virtual call via [[doGenCode]] — the
+  * expression participates in whole-stage codegen as a leaf call instead
+  * of forcing a fallback projection for the whole operator subtree.
+  * Executor-side state (schema LRU whose entries carry per-thread datum
+  * readers) is resolved lazily from the JVM-wide registry keyed by the
+  * provider's cache token — the reference's two-level cache design
+  * (`AvroTransform.java:108-109`) relocated per executor.
   *
   * Null semantics: null input → null output (tombstone passthrough,
   * `AvroTransform.java:168-170`) via `UnaryExpression`'s default
@@ -65,11 +64,15 @@ case class AvroDecodeEnvelope(
   * `(origin_schema_id int, origin_message string, origin_schema string)`
   * instead of re-serialized envelope bytes — the relational face of the
   * pipeline for queries over decoded fields. Native (no ScalaUDF encoder
-  * round-trip); null input → null struct (tombstone). */
+  * round-trip); null input → null struct (tombstone). PERMISSIVE maps a
+  * body that does not decode to a null struct (and counts it), where the
+  * envelope forwards the original bytes; wire violations throw in both
+  * modes. */
 case class AvroDecodeStruct(
     child: Expression,
     provider: SchemaProvider,
-    capacity: Int) extends UnaryExpression {
+    capacity: Int,
+    permissive: Boolean) extends UnaryExpression {
 
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
@@ -85,13 +88,13 @@ case class AvroDecodeStruct(
     AvroDecoderState.forProvider(provider, capacity)
 
   override def nullSafeEval(input: Any): Any = {
-    val framed = graft.avro.WireFormat.parse(input.asInstanceOf[Array[Byte]])
-    val cached = state.cachedSchema(framed.schemaId)
-    val json = state.decodeToJson(cached, framed.schemaId, framed.body)
-    org.apache.spark.sql.catalyst.InternalRow(
-      framed.schemaId,
-      org.apache.spark.unsafe.types.UTF8String.fromString(json),
-      org.apache.spark.unsafe.types.UTF8String.fromString(cached.json))
+    val d = DecodeKernel.decode(input.asInstanceOf[Array[Byte]], state,
+      permissive, strip = true)
+    if (d == null) null
+    else org.apache.spark.sql.catalyst.InternalRow(
+      d.schemaId,
+      org.apache.spark.unsafe.types.UTF8String.fromString(d.json),
+      org.apache.spark.unsafe.types.UTF8String.fromString(d.schemaJson))
   }
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -100,7 +103,7 @@ case class AvroDecodeStruct(
       classOf[AvroDecodeStruct].getName)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) " +
-        s"$self.nullSafeEval($c);")
+        s"$self.nullSafeEval($c);\n${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildInternal(newChild: Expression)

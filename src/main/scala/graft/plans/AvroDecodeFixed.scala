@@ -184,7 +184,7 @@ case class AvroDecodeFixed(
     AvroCatalyst.converter(readerSchema)
 
   // GenericDatumReader is not thread-safe; BinaryDecoder is reusable per
-  // thread — same executor-side state shape as AvroDecoderState.
+  // thread.
   private final class ThreadState {
     val reader = new GenericDatumReader[AnyRef](schema, readerSchema)
     var decoder: BinaryDecoder = _
@@ -214,11 +214,15 @@ case class AvroDecodeFixed(
     val self = ctx.addReferenceObj("avroDecodeFixed", this,
       classOf[AvroDecodeFixed].getName)
     // cast follows dataType: top-level schemas need not be records
-    // (string/long/array/map all map to non-InternalRow java types)
+    // (string/long/array/map all map to non-InternalRow java types); a
+    // permissive decode failure returns null, tested before unboxing
     val boxed = org.apache.spark.sql.catalyst.expressions.codegen
       .CodeGenerator.boxedType(dataType)
+    val out = ctx.freshName("decoded")
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = ($boxed) $self.nullSafeEval($c);")
+      s"""Object $out = $self.nullSafeEval($c);
+         |${ev.isNull} = $out == null;
+         |if (!${ev.isNull}) ${ev.value} = ($boxed) $out;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression)

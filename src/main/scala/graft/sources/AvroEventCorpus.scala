@@ -36,35 +36,22 @@ object AvroEventCorpus {
       |{"name":"props","type":"string"},
       |{"name":"ts_us","type":"long"}]}""".stripMargin.replace("\n", "")
 
-  // Executor-local parsed-schema/writer cache for the ENCODE side (the
-  // decode side has its own in AvroDecoderState).
-  private val schemaCache = new ConcurrentHashMap[String, Schema]()
-  private def parsedSchema(json: String): Schema =
-    schemaCache.computeIfAbsent(json, j => new Schema.Parser().parse(j))
-
-  private val writerCache =
-    ThreadLocal.withInitial[java.util.HashMap[String, GenericDatumWriter[AnyRef]]](
-      () => new java.util.HashMap)
+  private lazy val eventSchema: Schema =
+    new Schema.Parser().parse(EventSchemaJson)
 
   /** Avro-binary encode of one events row. Deterministic. */
   def encodeEventBody(eventId: Long, userId: Long, eventType: String,
       value: Double, props: String, tsUs: Long): Array[Byte] = {
-    val schema = parsedSchema(EventSchemaJson)
-    val rec = new GenericData.Record(schema)
+    val rec = new GenericData.Record(eventSchema)
     rec.put("event_id", eventId)
     rec.put("user_id", userId)
     rec.put("event_type", eventType)
     rec.put("value", value)
     rec.put("props", props)
     rec.put("ts_us", tsUs)
-    var writer = writerCache.get().get(EventSchemaJson)
-    if (writer == null) {
-      writer = new GenericDatumWriter[AnyRef](schema)
-      writerCache.get().put(EventSchemaJson, writer)
-    }
     val out = new ByteArrayOutputStream(64)
     val enc = EncoderFactory.get().binaryEncoder(out, null)
-    writer.write(rec, enc)
+    new GenericDatumWriter[AnyRef](eventSchema).write(rec, enc)
     enc.flush()
     out.toByteArray
   }

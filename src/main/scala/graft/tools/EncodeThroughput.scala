@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{ZstdDecode, ZstdDictTrain, ZstdEncode}
 
-/** Compression-throughput artifact (round 14, the encode twin of
-  * [[DecodeThroughput]]): the zstd encoder's MB/s and ratio over the
+/** Compression-throughput artifact (round 14): the zstd encoder's MB/s
+  * and ratio over the
   * REAL documents corpus, per literal mode and dictionary setting,
   * single-thread kernel numbers (the per-core cost a 1000-executor
   * export pays). Emits ONE JSON line; committed as

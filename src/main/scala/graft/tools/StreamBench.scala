@@ -3,16 +3,12 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.avro.WireFormat
-import graft.config.EngineConfig
-import graft.sources.AvroEventCorpus
 import graft.streaming.StreamingPipelines
 
 /** Structured-Streaming throughput benchmarks over an unbounded `rate`
-  * source.
+  * source. The reference decode pipeline is measured by
+  * `python3 perfbench/run.py --workload decode_stream` instead.
   *
-  * `decode` mode: rate rows become Confluent-framed Avro (native encode —
-  * no UDF) and run the full streaming decode pipeline into a `noop` sink.
   * `neardup` mode: rate rows become synthetic documents (1-in-16 an exact
   * re-crawl of an earlier doc) and run [[StreamingPipelines
   * .ingestNearDupStream]] — every batch probes the persistent LSH index
@@ -37,90 +33,42 @@ import graft.streaming.StreamingPipelines
   * All report steady-state rows/sec from the query's own progress
   * metrics (first batch dropped — it pays JIT + state init).
   *
-  * Usage: `runMain graft.tools.StreamBench [mode] [rowsPerSec] [seconds]`
-  * (defaults: decode, 200000 rows/s offered, 20 s measured).
+  * Usage: `runMain graft.tools.StreamBench <mode> [rowsPerSec] [seconds]`
+  * (defaults: a per-mode offered rate, 20 s measured).
   */
 object StreamBench {
-  private val Modes = Set("decode", "neardup", "cdc", "trending", "edges",
+  private val Modes = Seq("neardup", "cdc", "trending", "edges",
     "maintain", "quantiles")
 
   def main(args: Array[String]): Unit = {
-    val (mode, rest) =
-      if (args.headOption.exists(Modes)) (args.head, args.drop(1))
-      else ("decode", args)
-    val offered = rest.headOption.map(_.toInt).getOrElse(mode match {
+    val mode = args.headOption.filter(Modes.contains).getOrElse {
+      System.err.println(
+        s"usage: StreamBench <${Modes.mkString("|")}> [rowsPerSec] [seconds]")
+      sys.exit(2)
+    }
+    val offered = args.lift(1).map(_.toInt).getOrElse(mode match {
       case "neardup" => 20000
       case "cdc" => 50000
       case "trending" => 100000
       case "edges" => 100000
       case "maintain" => 50000
       case "quantiles" => 200000
-      case _ => 200000
     })
-    val seconds = rest.lift(1).map(_.toInt).getOrElse(20)
+    val seconds = args.lift(2).map(_.toInt).getOrElse(20)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
 
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (mode == "neardup") { runNearDup(spark, offered, seconds, cpus); return }
-    if (mode == "cdc") { runCdc(spark, offered, seconds, cpus); return }
-    if (mode == "trending") { runTrending(spark, offered, seconds, cpus); return }
-    if (mode == "edges") { runEdges(spark, offered, seconds, cpus); return }
-    if (mode == "maintain") { runMaintain(spark, offered, seconds, cpus); return }
-    if (mode == "quantiles") { runQuantiles(spark, offered, seconds, cpus); return }
-
-    val (provider, id) = AvroEventCorpus.registry()
-    val cfg = EngineConfig(Seq("stub://in-memory"), Map("events" -> false))
-
-    // rate → synthetic event record → framed Avro bytes, all row-local
-    val framed = spark.readStream.format("rate")
-      .option("rowsPerSecond", offered.toString)
-      .option("numPartitions", cpus)
-      .load()
-      .select(lit("events").as("topic"),
-        WireFormat.frameCol(id,
-          graft.avro.AvroTransform.toAvroFixed(
-            AvroEventCorpus.EventSchemaJson)(struct(
-            col("value").as("event_id"),
-            (col("value") % 1000).as("user_id"),
-            element_at(
-              array(lit("view"), lit("click"), lit("purchase"), lit("refund")),
-              ((col("value") % 4) + 1).cast("int")).as("event_type"),
-            ((col("value") % 1000).cast("double") / 10.0).as("value"),
-            concat(lit("{\"k\": "), (col("value") % 100).cast("string"),
-              lit("}")).as("props"),
-            unix_micros(col("timestamp")).as("ts_us")))).as("value"))
-
-    val decoded = StreamingPipelines.decodeStream(framed, cfg, provider)
-    val q = decoded.writeStream.format("noop")
-      .option("checkpointLocation",
-        s"${System.getProperty("java.io.tmpdir")}/graft_streambench_ckpt_" +
-          System.nanoTime())
-      .outputMode("append").start()
-
-    Thread.sleep(seconds * 1000L)
-    val progress = q.recentProgress.toSeq
-    q.exception.foreach { e =>
-      System.err.println(s"[streambench] query FAILED: ${e.cause}")
-      e.printStackTrace()
+    mode match {
+      case "neardup" => runNearDup(spark, offered, seconds, cpus)
+      case "cdc" => runCdc(spark, offered, seconds, cpus)
+      case "trending" => runTrending(spark, offered, seconds, cpus)
+      case "edges" => runEdges(spark, offered, seconds, cpus)
+      case "maintain" => runMaintain(spark, offered, seconds, cpus)
+      case "quantiles" => runQuantiles(spark, offered, seconds, cpus)
     }
-    System.err.println(s"[streambench] ${progress.size} progress entries; " +
-      progress.map(p => s"${p.numInputRows}r/" +
-        s"${p.durationMs.getOrDefault("triggerExecution", -1L)}ms")
-        .mkString(", "))
-    q.stop()
-    spark.stop()
-
-    // steady state = all batches after the first non-empty one
-    val batches = progress.filter(_.numInputRows > 0).drop(1)
-    val rows = batches.map(_.numInputRows).sum
-    val secs = batches.map(p =>
-      p.durationMs.getOrDefault("triggerExecution", 0L).toDouble / 1000.0).sum
-    val rps = if (secs > 0) rows / secs else 0.0
-    println(f"""{"metric":"stream_decode_rows_per_sec","value":$rps%.0f,""" +
-      s""""offered_rps":$offered,"batches":${batches.size},"rows":$rows}""")
   }
 
   /** Near-dup ingest throughput: synthetic docs (24 template tokens drawn
@@ -153,26 +101,8 @@ object StreamBench {
       checkpointLocation = Some(s"${indexPath}_ckpt")) { (pairs, _) =>
       pairCount += pairs.count()
     }
-    Thread.sleep(seconds * 1000L)
-    val progress = q.recentProgress.toSeq
-    q.exception.foreach { e =>
-      System.err.println(s"[streambench] neardup FAILED: ${e.cause}")
-      e.printStackTrace()
-    }
-    System.err.println(s"[streambench] ${progress.size} progress entries; " +
-      progress.map(p => s"${p.numInputRows}r/" +
-        s"${p.durationMs.getOrDefault("triggerExecution", -1L)}ms")
-        .mkString(", "))
-    q.stop()
-    spark.stop()
-    val batches = progress.filter(_.numInputRows > 0).drop(1)
-    val rows = batches.map(_.numInputRows).sum
-    val secs = batches.map(p =>
-      p.durationMs.getOrDefault("triggerExecution", 0L).toDouble / 1000.0).sum
-    val rps = if (secs > 0) rows / secs else 0.0
-    println(f"""{"metric":"stream_neardup_rows_per_sec","value":$rps%.0f,""" +
-      s""""offered_rps":$offered,"batches":${batches.size},""" +
-      s""""rows":$rows,"pairs":$pairCount}""")
+    finish("stream_neardup_rows_per_sec", q, spark, offered, seconds,
+      s""","pairs":$pairCount""")
   }
 
   /** Sleep out the run, dump per-batch progress to stderr, and emit the
@@ -180,7 +110,7 @@ object StreamBench {
   private def finish(metric: String,
       q: org.apache.spark.sql.streaming.StreamingQuery,
       spark: SparkSession, offered: Int, seconds: Int,
-      extra: String = ""): Unit = {
+      extra: => String = ""): Unit = {
     Thread.sleep(seconds * 1000L)
     val progress = q.recentProgress.toSeq
     q.exception.foreach { e =>

@@ -167,9 +167,73 @@ class AvroRobustnessSpec extends SparkFunSuite {
     // touch all 10 twice; capacity 3 forces constant eviction
     (0 until 2).foreach { _ =>
       ids.foreach { id =>
-        assert(state.schemaById(id).getName == s"R$id")
+        assert(state.cachedSchema(id).schema.getName == s"R$id")
       }
     }
+  }
+
+  test("concurrent decode under eviction: outputs byte-identical to a " +
+      "single-thread decode, exact swallow count") {
+    val stub = new SchemaRegistryStub
+    val m = 12
+    // distinct field names and shapes per schema: a codec of the wrong
+    // entry would render different JSON or fail to decode
+    val schemas = (0 until m).map { i =>
+      val extra =
+        if (i % 2 == 0) s""",{"name":"d$i","type":"double"}""" else ""
+      new Schema.Parser().parse(
+        s"""{"type":"record","name":"C$i","fields":[""" +
+          s"""{"name":"a$i","type":"long"},{"name":"s$i","type":"string"}""" +
+          s"""$extra]}""")
+    }
+    val ids = schemas.zipWithIndex.map { case (s, i) =>
+      stub.registerValueSchema(s"conc$i", s.toString)
+    }
+    def encode(i: Int, k: Int): Array[Byte] = {
+      val rec = new GenericData.Record(schemas(i))
+      rec.put(s"a$i", k.toLong * 1000003L)
+      rec.put(s"s$i", s"row $k \"q\" \u00e9")
+      if (i % 2 == 0) rec.put(s"d$i", k / 7.0)
+      val out = new ByteArrayOutputStream()
+      val enc = EncoderFactory.get().binaryEncoder(out, null)
+      new GenericDatumWriter[AnyRef](schemas(i)).write(rec, enc)
+      enc.flush()
+      out.toByteArray
+    }
+    // every 50th row is cut to its first byte: the string field hits EOF
+    val wires = (0 until 600).map { k =>
+      val i = (k * 7) % m
+      val body = encode(i, k)
+      WireFormat.frame(ids(i), if (k % 50 == 7) body.take(1) else body)
+    }
+    val corrupt = (0 until 600).count(_ % 50 == 7)
+    val provider = stub.toProvider
+
+    val single = new AvroDecoderState(provider, capacity = m)
+    val expected = wires.map(DecodeKernel.decodeValue(_, single, true))
+    assert(single.swallowedErrors.sum() == corrupt)
+
+    val threads = 8
+    val rounds = 3
+    val state = new AvroDecoderState(provider, capacity = 3)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val tasks = (0 until threads).map(t => pool.submit(
+        new java.util.concurrent.Callable[Int] {
+          override def call(): Int = {
+            var wrong = 0
+            for (_ <- 0 until rounds; j <- wires.indices) {
+              val k = (j + t * 37) % wires.size
+              val got = DecodeKernel.decodeValue(wires(k), state, true)
+              if (!java.util.Arrays.equals(got, expected(k))) wrong += 1
+            }
+            wrong
+          }
+        }))
+      assert(tasks.map(_.get()).sum == 0)
+    } finally pool.shutdown()
+    assert(state.swallowedErrors.sum() == threads.toLong * rounds * corrupt)
+    assert(state.cacheMisses.sum() > m, "capacity 3 must force eviction")
   }
 
   test("HTTP registry provider: fetch, 404 → None, multi-URL failover " +
@@ -219,15 +283,15 @@ class AvroRobustnessSpec extends SparkFunSuite {
       // 8 threads race the same cold id → exactly one fetch
       val tasks = (1 to 8).map(_ => pool.submit(
         new java.util.concurrent.Callable[String] {
-          override def call(): String = state.schemaById(1).getName
+          override def call(): String = state.cachedSchema(1).schema.getName
         }))
       assert(tasks.map(_.get()).forall(_ == "FullName"))
       assert(fetches.get() == 1, s"expected 1 fetch, got ${fetches.get()}")
 
       // a failing fetch propagates but the NEXT call retries and succeeds
       val before = fetches.get()
-      intercept[SchemaLookupException](state.schemaById(7))
-      assert(state.schemaById(7).getName == "FullName")
+      intercept[SchemaLookupException](state.cachedSchema(7))
+      assert(state.cachedSchema(7).schema.getName == "FullName")
       assert(fetches.get() == before + 2)
     } finally pool.shutdown()
   }

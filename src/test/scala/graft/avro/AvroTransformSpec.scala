@@ -137,6 +137,44 @@ class AvroTransformSpec extends SparkFunSuite {
       t.isInstanceOf[SparkException]))
   }
 
+  test("decoded(): PERMISSIVE maps an undecodable body to null fields and " +
+      "counts it; FAILFAST fails; wire violations throw in both modes") {
+    val (base, id) = registry()
+    val provider = base.copy(tokenOverride = Some("decoded-error-mode"))
+    val s = spark
+    import s.implicits._
+    // the repartition keeps the optimizer from folding the decode over the
+    // local relation, so the generated-code path runs
+    def corpus(values: Array[Byte]*) =
+      values.map(v => ("TransformTest", v)).toDF("topic", "value")
+        .repartition(2)
+    val good = WireFormat.frame(id, encodeFullName("a", "b"))
+    val truncated = WireFormat.frame(id, Array[Byte](0x02))
+
+    val before = AvroDecoderState.swallowedErrorCount(provider.cacheToken)
+    val msgs = AvroTransform.decoded(corpus(good, truncated, null, good),
+      cfg(), provider)
+      .select("origin_schema_id", "origin_message").collect()
+      .map(r => (Option(r.get(0)), Option(r.getString(1))))
+    assert(msgs.count(_ == (Some(id), Some("""{"first":"a","last":"b"}"""))) == 2)
+    assert(msgs.count(_ == (None, None)) == 2)
+    assert(AvroDecoderState.swallowedErrorCount(provider.cacheToken) ==
+      before + 1)
+
+    val strict = AvroTransform.decoded(corpus(good, truncated),
+      cfg(mode = ErrorMode.FailFast), provider)
+    assert(rootChain(intercept[Throwable](strict.collect()))
+      .exists(_.isInstanceOf[java.io.IOException]))
+    for (mode <- Seq(ErrorMode.Permissive, ErrorMode.FailFast)) {
+      val short = AvroTransform.decoded(
+        corpus(good, Array[Byte](0, 0, 0, 0, 1)), cfg(mode = mode), provider)
+      assert(rootChain(intercept[Throwable](short.collect()))
+        .exists(_.isInstanceOf[WireFormatException]))
+    }
+    assert(AvroDecoderState.swallowedErrorCount(provider.cacheToken) ==
+      before + 1)
+  }
+
   test("key decode: fields inlined + originSchema injected, corrected strip " +
       "semantics (AvroTransform.java:224-229; SURVEY.md §7.4)") {
     val (provider, id) = registry()

@@ -130,6 +130,12 @@ class AvroTypedFastSpec extends SparkFunSuite {
       .select(decP(col("value")).as("e")).collect()
     assert(rows(0).getAs[Row]("e").getString(0) == "a")
     assert(rows(1).isNullAt(0) && rows(2).isNullAt(0))
+    // same rows through generated code: the repartition keeps the
+    // optimizer from folding the decode over the local relation
+    val firsts = valueDf(Seq(good, corrupt, null)).repartition(2)
+      .select(decP(col("value")).as("e")).select(col("e.first"))
+      .collect().map(r => Option(r.getString(0)))
+    assert(firsts.sorted.toSeq == Seq(None, None, Some("a")))
     // failfast on the same corrupt body
     val strict = valueDf(Seq(corrupt))
       .select(AvroTransform.fromAvroFixed(FullNameSchemaJson)(col("value")))

@@ -28,8 +28,12 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * survives executor loss. The flag is read per call, so a session can
   * scope it around a fragile stage. Semantics are unchanged either
   * way: both forms materialize the same rows and truncate lineage;
-  * `unpersist()` on the result remains valid (a no-op for reliable
-  * checkpoints' files, which SparkContext cleans up).
+  * `unpersist()` on the result remains valid, but it does not delete a
+  * reliable checkpoint's files. Spark deletes those only when
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (once the
+  * checkpointed RDD is garbage-collected), so a deployment that sets
+  * `spark.graft.pin.reliable=true` must set that too, or every pin's
+  * files stay in the checkpoint directory.
   */
 object Pin {
   private def reliable(df: Dataset[_]): Boolean =

@@ -11,6 +11,26 @@ import graft.SparkFunSuite
   * actually writes to the checkpoint directory. */
 class PinSpec extends SparkFunSuite {
 
+  /** Runs `body` with reliable pins into a fresh checkpoint dir, then
+    * restores the flag and the previous dir, so each test passes alone
+    * and in any order. Spark has no public way to unset the dir, so a
+    * session that had none keeps the fresh one. */
+  private def reliablePins[A](body: String => A): A = {
+    val sc = spark.sparkContext
+    // getCheckpointDir is the per-context subdirectory Spark made under
+    // the dir it was given; setting that parent again restores the base
+    val prev = sc.getCheckpointDir.map(p => new java.io.File(p).getParent)
+    val dir = java.nio.file.Files.createTempDirectory("graft_pin_spec")
+      .toString
+    sc.setCheckpointDir(dir)
+    spark.conf.set("spark.graft.pin.reliable", "true")
+    try body(dir)
+    finally {
+      spark.conf.set("spark.graft.pin.reliable", "false")
+      prev.foreach(sc.setCheckpointDir)
+    }
+  }
+
   test("reliable pins produce identical results and hit the " +
       "checkpoint dir") {
     val s = spark
@@ -25,18 +45,14 @@ class PinSpec extends SparkFunSuite {
 
     val local = run()
 
-    val ckDir = java.nio.file.Files
-      .createTempDirectory("graft_pin_spec").toString
-    s.sparkContext.setCheckpointDir(ckDir)
-    s.conf.set("spark.graft.pin.reliable", "true")
-    try {
+    reliablePins { ckDir =>
       val rel = run()
       assert(rel == local,
         "reliable pins must not change operator results")
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckDir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, "reliable pin must write checkpoint files")
-    } finally s.conf.set("spark.graft.pin.reliable", "false")
+    }
   }
 
   test("pinLazy defers materialization until first use, both modes") {
@@ -45,8 +61,8 @@ class PinSpec extends SparkFunSuite {
     import graft.config.Pin._
     val base = (0L until 50L).toDF("v")
     assert(base.pinLazy().agg(sum($"v")).head().getLong(0) == 1225L)
-    s.conf.set("spark.graft.pin.reliable", "true")
-    try assert(base.pinLazy().agg(sum($"v")).head().getLong(0) == 1225L)
-    finally s.conf.set("spark.graft.pin.reliable", "false")
+    reliablePins { _ =>
+      assert(base.pinLazy().agg(sum($"v")).head().getLong(0) == 1225L)
+    }
   }
 }

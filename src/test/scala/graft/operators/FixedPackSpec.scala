@@ -33,12 +33,15 @@ class FixedPackSpec extends SparkFunSuite {
   }
 
   test("result is independent of the shard count") {
-    val docs = docsOf(Seq(3, 0, 7, 1, 4, 9, 2, 6, 5, 8))
-    val a = Chunking.fixedPack(docs, "text", "doc_id", seqLen = 8,
-      nShards = 1).collect().toSeq
-    val b = Chunking.fixedPack(docs.repartition(5), "text", "doc_id",
-      seqLen = 8, nShards = 4).collect().toSeq
-    assert(a == b)
+    // empty input included: every shard count packs it to no sequences
+    for (tokens <- Seq(Seq(3, 0, 7, 1, 4, 9, 2, 6, 5, 8), Seq.empty[Int])) {
+      val docs = docsOf(tokens)
+      val a = Chunking.fixedPack(docs, "text", "doc_id", seqLen = 8,
+        nShards = 1).collect().toSeq
+      val b = Chunking.fixedPack(docs.repartition(5), "text", "doc_id",
+        seqLen = 8, nShards = 4).collect().toSeq
+      assert(a == b && a.isEmpty == tokens.isEmpty)
+    }
   }
 
   test("shard count scales past the old 64 ceiling: nShards=256 (the " +

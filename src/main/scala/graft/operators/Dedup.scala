@@ -705,34 +705,36 @@ object Dedup {
       path: String, shingleK: Int = 3, numHashes: Int = 64,
       bands: Int = 16): LshIndex = {
     val index = LshIndex(path, shingleK, numHashes, bands)
-    writeLshDatasets(corpus, textCol, idCol, index, "overwrite")
+    writeLshDatasets(corpus, textCol, idCol, index)
     index
   }
 
   /** Append a delta's band keys and shingle sets to an existing index —
-    * the post-probe step of an ingest loop, so later deltas see this one.
-    * No dedup of re-appended ids (same convention as the IVF append):
-    * duplicate band rows only re-nominate candidates, which the probe's
-    * distinct collapses, but duplicate SIDECAR rows would duplicate
-    * verified pairs — callers with at-least-once retries must make the
-    * append conditional on the batch id (idempotent sink pattern —
-    * [[graft.streaming.StreamingPipelines.ingestNearDupStream]] does,
-    * via the index's [[graft.streaming.IngestLedger]] high-water mark). */
+    * the post-probe step of an ingest loop, so later deltas see this one
+    * — through [[graft.streaming.IngestLedger.exactlyOnceAppend]]'s
+    * staged commit: a replay of the same (queryId, batchId) is a no-op,
+    * and a crash at any point either re-runs against an untouched index
+    * or only finishes the renames. Ids are not deduplicated: duplicate
+    * band rows only re-nominate candidates, which the probe's distinct
+    * collapses, but duplicate SIDECAR rows would duplicate verified
+    * pairs — so an anonymous caller (empty queryId, no replay identity)
+    * that appends the same batch twice gets both copies. */
   def appendToLshIndex(index: LshIndex, delta: DataFrame, textCol: String,
-      idCol: String): LshIndex = {
-    writeLshDatasets(delta, textCol, idCol, index, "append")
+      idCol: String, queryId: String = "", batchId: Long = 0L): LshIndex = {
+    graft.streaming.IngestLedger.exactlyOnceAppend(delta.sparkSession,
+      index.path, queryId, batchId)(root =>
+        stageLshAppend(index, delta, textCol, idCol, root))
     index
   }
 
   /** Stage an append's datasets under `root` MIRRORING the index layout
     * (`root/bands`, `root/shingles`) without touching the live index —
-    * the write half of the streaming loop's exactly-once staged commit
+    * the write half of [[appendToLshIndex]]'s staged commit
     * ([[graft.streaming.IngestLedger.exactlyOnceAppend]] publishes the
     * staged files by per-file rename after its manifest commit point). */
   def stageLshAppend(index: LshIndex, delta: DataFrame, textCol: String,
       idCol: String, root: String): Unit =
-    writeLshDatasets(delta, textCol, idCol, index.copy(path = root),
-      "append")
+    writeLshDatasets(delta, textCol, idCol, index.copy(path = root))
 
   /** Compact a written LSH index into a FRESH path — the maintenance
     * half of the ingest loop: every micro-batch appends one file per
@@ -764,38 +766,34 @@ object Dedup {
     index.copy(path = newPath)
   }
 
-  /** Shared writer — single place that defines the on-disk schemas
-    * `bands(bk, id)` and `shingles(id, shingles)`. The shingle relation
+  /** Shared build/stage writer — single place that defines the on-disk
+    * schemas `bands(bk, id)` and `shingles(id, shingles)`. Appends write
+    * here only under a fresh staging root. The shingle relation
     * is materialized once (localCheckpoint) so the text kernel — the
     * dominant cost — runs ONE corpus pass feeding both writes; a
     * production 100 TB build that cannot hold the shingle relation in
     * block storage writes the sidecar first and derives the band
     * relation by re-reading it. */
   private def writeLshDatasets(docs: DataFrame, textCol: String,
-      idCol: String, index: LshIndex, mode: String): Unit = {
+      idCol: String, index: LshIndex): Unit = {
     val sh = docs.select(col(idCol).as("id"),
       TF.wordShingleHashes(col(textCol), index.shingleK).as("shingles"))
       .pin()
-    // An overwrite REBUILD deletes the band relation up front: probes
-    // gate readiness on bands, so a crash mid-rebuild fails loud
-    // (bands missing) instead of silently mixing the new sidecar with
-    // stale v1 band keys. Rebuilders wanting zero downtime should build
-    // at a fresh path and swap the handle.
-    if (mode == "overwrite") {
-      val hPath = new org.apache.hadoop.fs.Path(s"${index.path}/bands")
-      val fs = hPath.getFileSystem(
-        docs.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(hPath, true)
-      ()
-    }
+    // A REBUILD deletes the band relation up front: probes gate
+    // readiness on bands, so a crash mid-rebuild fails loud (bands
+    // missing) instead of silently mixing the new sidecar with stale v1
+    // band keys. Rebuilders wanting zero downtime should build at a
+    // fresh path and swap the handle.
+    val hPath = new org.apache.hadoop.fs.Path(s"${index.path}/bands")
+    hPath.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(hPath, true)
     // sidecar FIRST: probes and the streaming loop gate readiness on the
-    // bands relation, so bands-present must imply sidecar-present — a
-    // crash between the writes then re-appends the sidecar (benign
-    // duplicate rows, see appendToLshIndex) instead of leaving band rows
-    // whose candidates silently drop at the verification join
-    sh.write.mode(mode).parquet(s"${index.path}/shingles")
+    // bands relation, so bands-present must imply sidecar-present
+    // instead of leaving band rows whose candidates silently drop at
+    // the verification join
+    sh.write.mode("overwrite").parquet(s"${index.path}/shingles")
     bandRows(sh, index.numHashes, index.bands)
-      .write.mode(mode).parquet(s"${index.path}/bands")
+      .write.mode("overwrite").parquet(s"${index.path}/bands")
   }
 
   /** Probe a DELTA batch against a [[buildLshIndex]] written index:
@@ -963,15 +961,6 @@ object Dedup {
       textCol: String, idCol: String, threshold: Double = 0.8)
       : DataFrame = {
     val spark = delta.sparkSession
-    def emptyPairs: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("a",
-          delta.schema(idCol).dataType),
-        org.apache.spark.sql.types.StructField("b",
-          delta.schema(idCol).dataType),
-        org.apache.spark.sql.types.StructField("jaccard",
-          org.apache.spark.sql.types.DoubleType))))
     val dSh = delta.select(col(idCol).as("id"),
       TF.wordShingleHashes(col(textCol), index.shingleK).as("shingles"))
       .pin()
@@ -993,25 +982,28 @@ object Dedup {
     val probeBuckets = dBands
       .select(pmod(hash(col("bk")), lit(index.nBuckets)).as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    if (probeBuckets.isEmpty) return emptyPairs
+    if (probeBuckets.isEmpty) return emptyPairs(delta, idCol)
     // The candidate relation is pinned LAZILY (round 18, §1.2 — don't
     // compute things twice): the candBuckets collect below is the first
     // action over it, so that one job materializes the pruned-bands
     // join and the final plan reads the pinned rows instead of
     // re-running it (round 17 kept it un-materialized and paid the
     // bands join twice per probe — measured in the job profile). The
-    // bands-side PartitionFilters contract is still spec-pinned via
-    // [[lshProbeCandsPlan]], which exposes the exact relation this
-    // probe executes inside its candidate job. `eager = false` because
-    // the pin, not eagerness, is the goal — no extra materialization
-    // job. cands is delta-proportional (≥1 row per matched delta doc),
-    // the same audit-sized-pin contract as dSh/dBands above.
-    val cands = bucketedCands(index, dBands, probeBuckets, hinted)
+    // bands-side PartitionFilters contract is spec-pinned on this
+    // relation's plan as the pin reports it to a QueryExecutionListener.
+    // `eager = false` because the pin, not eagerness, is the goal — no
+    // extra materialization job. cands is delta-proportional (≥1 row
+    // per matched delta doc), the same audit-sized-pin contract as
+    // dSh/dBands above.
+    val cands = spark.read.parquet(s"${index.path}/bands")
+      .filter(col("bucket").isin(probeBuckets: _*))
+      .join(hinted(dBands), Seq("bk"))
+      .select(col("id").as("a"), col("b")).distinct()
       .pinLazy()
     val candBuckets = cands
       .select(pmod(hash(col("a")), lit(index.nBuckets)).as("bucket"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    if (candBuckets.isEmpty) return emptyPairs
+    if (candBuckets.isEmpty) return emptyPairs(delta, idCol)
     spark.read.parquet(s"${index.path}/shingles")
       .filter(col("bucket").isin(candBuckets: _*))
       .select(col("id").as("a"), col("shingles").as("sh_a"))
@@ -1023,33 +1015,17 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
-  /** The bucketed probe's candidate stage: pruned bands scan ⋈ delta
-    * band rows → distinct (a, b) id pairs. Shared by the probe (which
-    * pins its one execution) and the plan-contract spec hook below. */
-  private def bucketedCands(index: LshIndexBucketed, dBands: DataFrame,
-      probeBuckets: Seq[Int],
-      hinted: DataFrame => DataFrame): DataFrame =
-    dBands.sparkSession.read.parquet(s"${index.path}/bands")
-      .filter(col("bucket").isin(probeBuckets: _*))
-      .join(hinted(dBands), Seq("bk"))
-      .select(col("id").as("a"), col("b")).distinct()
-
-  /** Spec hook (round 18): the UNPINNED candidate plan
-    * [[lshProbeNearDupBucketed]] executes inside its pinned candidate
-    * job — the plan-contract spec asserts the bands-side partition
-    * pruning here, since the probe's FINAL plan now reads the pinned
-    * candidate rows (`Scan ExistingRDD`) rather than re-running the
-    * bands join. Same construction, same pruning, no pin. */
-  private[graft] def lshProbeCandsPlan(index: LshIndexBucketed,
-      delta: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val dSh = delta.select(col(idCol).as("id"),
-      TF.wordShingleHashes(col(textCol), index.shingleK).as("shingles"))
-    val dBands = bandRows(dSh, index.numHashes, index.bands)
-      .select(col("bk"), col("id").as("b"))
-    val probeBuckets = dBands
-      .select(pmod(hash(col("bk")), lit(index.nBuckets)).as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    bucketedCands(index, dBands, probeBuckets, identity)
+  /** The schema-stable empty result of the near-dup probes:
+    * `(a, b, jaccard)` with the id columns typed from `delta`'s `idCol`,
+    * so a sink sees one schema whether or not the index has data yet. */
+  private[graft] def emptyPairs(delta: DataFrame, idCol: String)
+      : DataFrame = {
+    import org.apache.spark.sql.types._
+    val idType = delta.schema(idCol).dataType
+    delta.sparkSession.createDataFrame(
+      delta.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("a", idType), StructField("b", idType),
+        StructField("jaccard", DoubleType))))
   }
 
   /** Stage a delta's band keys and shingle sets under `root` MIRRORING

@@ -207,7 +207,7 @@ object Similarity {
       .orderBy(col("cid")).limit(n).collect()
     val centIds = centRows.map(_.getLong(0))
     val centVecs = centRows.map(_.getSeq[Double](1).toArray)
-    writeCells(corpus, centIds, centVecs, vecCol, idCol, "overwrite", path)
+    writeCells(corpus, centIds, centVecs, vecCol, idCol, path)
     IvfIndex(path, centIds, centVecs, n)
   }
 
@@ -220,26 +220,30 @@ object Similarity {
     * centroids ([[kmeansCentroids]]) + rebuild only when drift warrants.
     *
     * Column names are normalized to the index's fixed written schema, so
-    * the batch may use different source names than the build. Appends are
-    * BLIND (no id dedup): appending the same batch twice stores both
-    * copies — delta hygiene is the ingest pipeline's job (dedup by id
-    * before append, or rebuild). */
+    * the batch may use different source names than the build. The batch
+    * lands through [[graft.streaming.IngestLedger.exactlyOnceAppend]]'s
+    * staged commit as an anonymous append (no streaming loop appends to
+    * this index, so there is no replay identity to carry). Ids are not
+    * deduplicated: appending the same batch twice stores both copies —
+    * delta hygiene is the ingest pipeline's job (dedup by id before
+    * append, or rebuild). */
   def appendToIvfIndex(index: IvfIndex, rows: DataFrame,
       vecCol: String = "embedding", idCol: String = "vec_id"): IvfIndex = {
-    writeCells(rows, index.centIds, index.centVecs, vecCol, idCol,
-      "append", index.path)
+    graft.streaming.IngestLedger.exactlyOnceAppend(rows.sparkSession,
+      index.path, "", 0L)(root =>
+        writeCells(rows, index.centIds, index.centVecs, vecCol, idCol, root))
     index
   }
 
-  /** Shared build/append writer — single place that defines the index's
+  /** Shared build/stage writer — single place that defines the index's
     * on-disk schema `(id, vec, cell)`. */
   private def writeCells(rows: DataFrame, centIds: Array[Long],
       centVecs: Array[Array[Double]], vecCol: String, idCol: String,
-      mode: String, path: String): Unit =
+      path: String): Unit =
     rows.select(col(idCol).as("id"), col(vecCol).as("vec"),
         element_at(VF.nearestCentroids(col(vecCol), centIds, centVecs, 1), 1)
           .as("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(path)
+      .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Probe a written IVF index: the corpus scan is PARTITION-PRUNED to the
     * union of the queries' `nprobe` cells (`PartitionFilters: [cell IN …]`
@@ -779,22 +783,24 @@ object Similarity {
     * assigned row-locally with the index's OWN centroid table and
     * residual codebooks (both rules unchanged, so existing probes stay
     * correct and mix transparently with the appended rows), then
-    * append-written into the cell partitions. No rewrite, no shuffle,
-    * one scan of the batch; re-train ([[buildIvfPqIndex]]) only when
-    * drift warrants. Appends are BLIND (no id dedup) — delta hygiene is
-    * the ingest pipeline's job, same contract as the IVF index. */
+    * written into the cell partitions. No rewrite, no shuffle, one scan
+    * of the batch; re-train ([[buildIvfPqIndex]]) only when drift
+    * warrants. The batch lands through
+    * [[graft.streaming.IngestLedger.exactlyOnceAppend]]'s staged commit:
+    * a replayed (queryId, batchId) no-ops, and an anonymous caller's
+    * repeated batch stores both copies. */
   def appendToIvfPqIndex(index: IvfPqIndex, rows: DataFrame,
-      vecCol: String = "embedding", idCol: String = "vec_id")
-      : IvfPqIndex = {
-    ivfPqCodedRows(index, rows, vecCol, idCol)
-      .write.mode("append").partitionBy("cell").parquet(index.path)
+      vecCol: String = "embedding", idCol: String = "vec_id",
+      queryId: String = "", batchId: Long = 0L): IvfPqIndex = {
+    graft.streaming.IngestLedger.exactlyOnceAppend(rows.sparkSession,
+      index.path, queryId, batchId)(root =>
+        stageIvfPqAppend(index, rows, vecCol, idCol, root))
     index
   }
 
   /** Stage an append's coded rows under `root` mirroring the live
-    * cell-partitioned layout — the write half of the streaming loop's
-    * exactly-once staged commit (see
-    * [[graft.streaming.IngestLedger.exactlyOnceAppend]]). */
+    * cell-partitioned layout — the write half of
+    * [[appendToIvfPqIndex]]'s staged commit. */
   def stageIvfPqAppend(index: IvfPqIndex, rows: DataFrame,
       vecCol: String, idCol: String, root: String): Unit =
     ivfPqCodedRows(index, rows, vecCol, idCol)

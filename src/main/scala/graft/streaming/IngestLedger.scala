@@ -4,13 +4,13 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
 
-/** Last-applied (queryId, batchId) high-water mark for a written index —
-  * the replay guard [[graft.operators.Dedup.appendToLshIndex]]'s contract
-  * prescribes ("callers with at-least-once retries must make the append
-  * conditional on the batch id"), factored out of
-  * [[BucketedSnapshotStore.publish]]'s manifest so the flat
-  * append-written indexes (LSH bands + sidecar, IVF, IVF-PQ) get the
-  * same exactly-once token without adopting the bucketed layout.
+/** The one append path of the written indexes (flat and bucketed LSH,
+  * bucketed digest, IVF, IVF-PQ and the flat digest directory): every
+  * `appendTo*` writes its batch through [[exactlyOnceAppend]], and every
+  * ledgered streaming loop guards its batch body with the same
+  * (queryId, batchId) high-water mark — factored out of
+  * [[BucketedSnapshotStore.publish]]'s manifest so the indexes get the
+  * same exactly-once token without adopting the snapshot layout.
   *
   * Protocol: `<indexPath>/_ingest_hwm` holds the newest applied
   * (queryId, batchId), written via the same write-tmp + atomic-rename
@@ -63,22 +63,30 @@ object IngestLedger {
     * everything sequenced before it) already ran. Always false for an
     * anonymous caller (empty queryId). */
   def alreadyApplied(spark: SparkSession, indexPath: String,
-      queryId: String, batchId: Long): Boolean = {
-    if (queryId.isEmpty) return false
-    val p = new Path(new Path(indexPath), MarkFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return false
+      queryId: String, batchId: Long): Boolean =
+    queryId.nonEmpty &&
+      readMark(spark, new Path(indexPath)).exists { case (q, hwm) =>
+        q == queryId && hwm >= batchId
+      }
+
+  /** The (queryId, batchId) recorded in `<indexRoot>/_ingest_hwm`, if
+    * any. */
+  private def readMark(spark: SparkSession, indexRoot: Path)
+      : Option[(String, Long)] = {
+    val p = new Path(indexRoot, MarkFile)
+    val fs = fsOf(spark, p)
+    if (!fs.exists(p)) return None
     val kv = BucketedSnapshotStore.readSmallFile(fs, p).linesIterator
       .filter(_.contains('=')).map { l =>
         val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
       }.toMap
-    kv.get("lastQueryId").contains(queryId) &&
-      kv.get("lastBatchId").exists(_.toLong >= batchId)
+    for (q <- kv.get("lastQueryId"); b <- kv.get("lastBatchId"))
+      yield (q, b.toLong)
   }
 
-  /** Record (queryId, batchId) as applied — call immediately after the
+  /** Record (queryId, batchId) as applied — called immediately after the
     * index append commits. No-op for an anonymous caller. */
-  def record(spark: SparkSession, indexPath: String, queryId: String,
+  private def record(spark: SparkSession, indexPath: String, queryId: String,
       batchId: Long): Unit = {
     if (queryId.isEmpty) return
     BucketedSnapshotStore.atomicWrite(spark,
@@ -89,7 +97,10 @@ object IngestLedger {
   /** Filesystem-safe transaction token. The queryId is a UUID and the
     * batchId a long — both path-safe; sanitize defensively anyway. */
   private[streaming] def tokenOf(queryId: String, batchId: Long): String =
-    queryId.replaceAll("[^A-Za-z0-9-]", "_") + "_b" + batchId
+    tokenPrefix(queryId) + batchId
+
+  private def tokenPrefix(queryId: String): String =
+    queryId.replaceAll("[^A-Za-z0-9-]", "_") + "_b"
 
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -146,15 +157,12 @@ object IngestLedger {
     val fs = fsOf(spark, indexRoot)
     fs.delete(stagingRoot(indexRoot, token), true)
     fs.delete(manifestPath(indexRoot, token), false)
+    // one writer per index: an empty staging dir holds no other batch
+    val sDir = new Path(indexRoot, StagingDir)
+    if (fs.exists(sDir) && fs.listStatus(sDir).isEmpty) fs.delete(sDir, false)
     ()
   }
 
-  /** Stage-manifest-move-mark: `stage` writes the batch's files under
-    * the given staging root MIRRORING the live index layout; the
-    * protocol then publishes them exactly-once (see the object doc).
-    * Anonymous callers (empty queryId) append without a transaction —
-    * the staged files move under a batch-only token, with no replay
-    * identity to guard (the [[BucketedSnapshotStore.publish]] rule). */
   /** Delete staging debris under `_ingest_staging` — called at every
     * append entry (one staging-dir listing: index bookkeeping, not
     * data). Only runs once THIS query owns the high-water mark (it has
@@ -181,17 +189,11 @@ object IngestLedger {
     if (queryId.isEmpty) return
     val root = new Path(indexPath)
     val fs = fsOf(spark, root)
-    val mark = new Path(root, MarkFile)
-    if (!fs.exists(mark)) return
-    val kv = BucketedSnapshotStore.readSmallFile(fs, mark).linesIterator
-      .filter(_.contains('=')).map { l =>
-        val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
-      }.toMap
-    if (!kv.get("lastQueryId").contains(queryId)) return
-    val hwmOpt = kv.get("lastBatchId").map(_.toLong)
-    if (hwmOpt.isEmpty) return
-    val hwm = hwmOpt.get
-    val prefix = queryId.replaceAll("[^A-Za-z0-9-]", "_") + "_b"
+    val hwm = readMark(spark, root) match {
+      case Some((q, b)) if q == queryId => b
+      case _ => return
+    }
+    val prefix = tokenPrefix(queryId)
     val sDir = new Path(root, StagingDir)
     if (!fs.exists(sDir)) return
     val entries = fs.listStatus(sDir).toSeq
@@ -217,6 +219,15 @@ object IngestLedger {
     }
   }
 
+  /** Stage-manifest-move-mark: `stage` writes the batch's files under
+    * the given staging root MIRRORING the live index layout; the
+    * protocol then publishes them exactly-once (see the object doc). A
+    * batch that stages no data file skips the manifest and moves and
+    * only records its mark.
+    * Anonymous callers (empty queryId) append without a transaction —
+    * the staged files move under a batch-only token, with no replay
+    * identity to guard and no mark left behind (the
+    * [[BucketedSnapshotStore.publish]] rule). */
   def exactlyOnceAppend(spark: SparkSession, indexPath: String,
       queryId: String, batchId: Long)(stage: String => Unit): Unit = {
     // the primitive is replay-safe on its own: an already-applied
@@ -243,9 +254,12 @@ object IngestLedger {
     fsOf(spark, root).delete(sr, true) // staging is re-runnable
     stage(sr.toString)
     val files = listDataFiles(spark, sr)
-    BucketedSnapshotStore.atomicWrite(spark, manifestPath(root, token),
-      files.mkString("\n")) // the commit point
-    completeMoves(spark, root, token, files)
+    // an empty batch has nothing to move: the mark alone commits it
+    if (files.nonEmpty) {
+      BucketedSnapshotStore.atomicWrite(spark, manifestPath(root, token),
+        files.mkString("\n")) // the commit point
+      completeMoves(spark, root, token, files)
+    }
     record(spark, indexPath, queryId, batchId)
     cleanup(spark, root, token)
   }

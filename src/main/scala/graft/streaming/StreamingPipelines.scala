@@ -4,13 +4,16 @@ import graft.config.Pin._
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
+import org.apache.spark.sql.types._
 
 import graft.avro.{AvroTransform, SchemaProvider}
 import graft.config.EngineConfig
 import graft.functions.{TextFunctions => TF}
+import graft.operators.{Dedup, Similarity}
 
 /** Structured-Streaming wiring for the engine (SURVEY.md §7.1 M2).
   *
@@ -122,6 +125,76 @@ object StreamingPipelines {
       .dropDuplicatesWithinWatermark("a", "b")
   }
 
+  /** The one foreachBatch launcher: runs `body` on every micro-batch of
+    * `df` in append mode. `checkpointLocation` must be DURABLE for
+    * batchIds to stay stable across restarts (omitted → a temp
+    * checkpoint, batchIds reset on restart). */
+  private def startForeachBatch(df: DataFrame,
+      checkpointLocation: Option[String])
+      (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = df.writeStream.outputMode("append").foreachBatch(body)
+    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
+    writer.start()
+  }
+
+  /** A stream over the files matching `glob` that land in `dir`, each
+    * micro-batch handed to `body` as its sorted new paths. The source
+    * carries file METADATA ONLY: the binaryFile source prunes the
+    * content read when only `path` is required, so the collect is
+    * metadata-scale. */
+  private def startNewFileBatches(spark: SparkSession, dir: String,
+      glob: String, checkpointLocation: Option[String])
+      (body: (SparkSession, Seq[String], Long) => Unit): StreamingQuery = {
+    val meta = spark.readStream.format("binaryFile")
+      .schema(StructType(Seq(StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+      .option("pathGlobFilter", glob).load(dir)
+      .select(col("path"))
+    startForeachBatch(meta, checkpointLocation) { (batch, batchId) =>
+      body(batch.sparkSession,
+        batch.collect().map(_.getString(0)).toSeq.sorted, batchId)
+    }
+  }
+
+  /** The one ledgered micro-batch step of the index-ingest loops, in
+    * order:
+    *  1. the [[IngestLedger]] guard: a replay of a fully-applied batch
+    *     no-ops (its sink ran, the index absorbed it), and a batch that
+    *     crashed after its manifest only finishes its moves and mark
+    *     (its probe and sink ran — they precede staging);
+    *  2. `result`: the loop's probe, or its schema-stable result for an
+    *     index with no data yet (each loop's own rule);
+    *  3. a pin, so the lazily-evaluated probe can never observe its own
+    *     batch once the append lands;
+    *  4. `sink`;
+    *  5. `append`: the index's `appendTo*` with the stream's
+    *     (queryId, batchId), handed the pinned result. */
+  private def ledgeredBatch(spark: SparkSession, indexPath: String,
+      queryId: String, batchId: Long, sink: (DataFrame, Long) => Unit)
+      (result: => DataFrame)(append: DataFrame => Unit): Unit =
+    if (!IngestLedger.alreadyApplied(spark, indexPath, queryId, batchId) &&
+        !IngestLedger.resumePending(spark, indexPath, queryId, batchId)) {
+      val out = result.pin()
+      sink(out, batchId)
+      append(out)
+    }
+
+  /** True iff `path` holds a data entry, not only the ledger's
+    * `_`-prefixed bookkeeping. Checked through the path's Hadoop FS,
+    * NOT java.io.File: the production index lives on hdfs:// or s3a://
+    * URIs, where a local-file check is always false and would silently
+    * disable every cross-batch suppression. */
+  private def hasData(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+  }
+
   /** Streaming INCREMENTAL INGEST — the streaming loop around
     * [[graft.operators.Dedup.incrementalNewByDigest]], i.e. the daily
     * delta-vs-corpus dedup run continuously: every micro-batch is deduped
@@ -142,28 +215,19 @@ object StreamingPipelines {
     * whole batch body is guarded by the index's [[IngestLedger]]
     * (queryId, batchId) high-water mark and the digest append goes
     * through [[IngestLedger.exactlyOnceAppend]]'s staged commit —
-    * same contract as the near-dup and bucketed loops (round 15;
-    * previously a bare `mode("append")` re-appended a replayed
-    * batch's digests — results stayed correct because the probe is an
-    * anti-join, but the index grew garbage on every crash-retry).
+    * same contract as the near-dup and bucketed loops.
     * `sink` receives the batchId for its own idempotent writes. Needs
     * a DURABLE `checkpointLocation` for batchIds to stay stable
     * across restarts (omitted → temp checkpoint, batchIds reset on
     * restart; the INDEX-level suppression still holds either way). */
   def ingestNewStream(docs: DataFrame, textCol: String, idCol: String,
       indexPath: String, checkpointLocation: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        newIngestBatch(batch, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
-          indexPath, textCol, idCol)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startForeachBatch(docs, checkpointLocation) { (batch, batchId) =>
+      newIngestBatch(batch, batchId,
+        IngestLedger.currentQueryId(batch.sparkSession),
+        indexPath, textCol, idCol)(sink)
+    }
 
   /** STREAMING COMMON CRAWL INGEST (round 15, split-fan-out round 16)
     * — the capstone pipeline as a continuous loop over a GROWING
@@ -177,52 +241,31 @@ object StreamingPipelines {
     * the WARC-Target-URI. Same replay contract as every ledgered
     * loop; needs a DURABLE `checkpointLocation`.
     *
-    * The stream source carries file METADATA ONLY (`path` — the
-    * binaryFile source prunes the content read when only `path` is
-    * required), and each micro-batch plans the SAME split read the
-    * batch capstone uses ([[graft.sources.ZstdSeekable.readArchives]]):
+    * The stream source carries file METADATA ONLY
+    * ([[startNewFileBatches]]), and each micro-batch plans the SAME
+    * split read the batch capstone uses
+    * ([[graft.sources.ZstdSeekable.readArchives]]):
     * a seekable archive fans into ceil(frames/k) positioned-range
     * tasks, so a 100 GB crawl segment decodes across the cluster.
     * Round 15 shipped this loop reading whole blobs as single binary
     * rows — one task and one ≤2 GiB JVM array per archive; that
     * ceiling is gone. */
-  def ingestCcArchiveStream(spark: org.apache.spark.sql.SparkSession,
+  def ingestCcArchiveStream(spark: SparkSession,
       archiveDir: String, indexPath: String, minWords: Int = 20,
       checkpointLocation: Option[String] = None,
       framesPerSplit: Int = 16)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val meta = spark.readStream.format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType))))
-      .option("pathGlobFilter", "*.warc.zst").load(archiveDir)
-      .select(col("path"))
-    val writer = meta.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // new-files-per-batch rows: metadata scale, bounded collect
-        val paths = batch.select(col("path")).collect()
-          .map(_.getString(0)).toSeq.sorted
-        ccArchivePathsBatch(batch.sparkSession, paths, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
-          indexPath, minWords, framesPerSplit)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startNewFileBatches(spark, archiveDir, "*.warc.zst",
+        checkpointLocation) { (s, paths, batchId) =>
+      ccArchivePathsBatch(s, paths, batchId, IngestLedger.currentQueryId(s),
+        indexPath, minWords, framesPerSplit)(sink)
+    }
 
   /** One micro-batch of [[ingestCcArchiveStream]] over archive PATHS
     * — plans the seekable split read, then the shared decode/dedup
     * body ([[ccArchiveBatch]]). Public for the identity/replay
     * specs. */
-  def ccArchivePathsBatch(spark: org.apache.spark.sql.SparkSession,
+  def ccArchivePathsBatch(spark: SparkSession,
       paths: Seq[String], batchId: Long, queryId: String,
       indexPath: String, minWords: Int, framesPerSplit: Int = 16)
       (sink: (DataFrame, Long) => Unit): Unit = {
@@ -241,44 +284,23 @@ object StreamingPipelines {
     * assembling pages in order, gating on word count, and feeding the
     * ledgered exact-dedup ingest keyed on the file path. Same replay
     * contract as every ledgered loop. */
-  def ingestPdfStream(spark: org.apache.spark.sql.SparkSession,
+  def ingestPdfStream(spark: SparkSession,
       pdfDir: String, indexPath: String, minWords: Int = 20,
       checkpointLocation: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val meta = spark.readStream.format("binaryFile")
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("modificationTime",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("length",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType))))
-      .option("pathGlobFilter", "*.pdf").load(pdfDir)
-      .select(col("path"))
-    val writer = meta.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val paths = batch.select(col("path")).collect()
-          .map(_.getString(0)).toSeq.sorted
-        pdfIngestBatch(batch.sparkSession, paths, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startNewFileBatches(spark, pdfDir, "*.pdf", checkpointLocation) {
+      (s, paths, batchId) =>
+        pdfIngestBatch(s, paths, batchId, IngestLedger.currentQueryId(s),
           indexPath, minWords)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+    }
 
   /** One micro-batch of [[ingestPdfStream]] — public for the
     * identity/replay specs. */
-  def pdfIngestBatch(spark: org.apache.spark.sql.SparkSession,
+  def pdfIngestBatch(spark: SparkSession,
       paths: Seq[String], batchId: Long, queryId: String,
       indexPath: String, minWords: Int)
       (sink: (DataFrame, Long) => Unit): Unit = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("path", StringType, nullable = false),
       StructField("blob", BinaryType, nullable = false)))
@@ -335,38 +357,23 @@ object StreamingPipelines {
 
   /** One micro-batch of [[ingestNewStream]] — public so the
     * replay-idempotence spec can apply the SAME (queryId, batchId)
-    * twice and pin byte-identical index contents. */
+    * twice and pin byte-identical index contents. With no index data
+    * yet, the probe runs against an empty digest relation. */
   def newIngestBatch(batch: DataFrame, batchId: Long, queryId: String,
       indexPath: String, textCol: String, idCol: String)
       (sink: (DataFrame, Long) => Unit): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    if (IngestLedger.alreadyApplied(spark, indexPath, queryId, batchId))
-      return // replay of a fully-applied batch: sink ran, index absorbed
-    if (IngestLedger.resumePending(spark, indexPath, queryId, batchId))
-      return // crashed between manifest and mark: probe + sink already
-             // ran (they precede staging) — only the moves were owed
-    // existence via the Hadoop FS of the path, NOT java.io.File —
-    // the production index lives on hdfs://-s3a:// URIs where a
-    // local-file check is always false and would silently disable
-    // every cross-batch suppression. "Has data" means a non-bookkeeping
-    // entry: the ledger's mark/staging live under the same root.
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(hPath) && fs.listStatus(hPath).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    val index =
-      if (hasData) spark.read.parquet(indexPath)
-      else Seq.empty[String].toDF("text_sha")
-    val fresh = graft.operators.Dedup
-      .incrementalNewByDigest(index, batch, textCol, idCol)
-      .pin()
-    sink(fresh, batchId)
-    IngestLedger.exactlyOnceAppend(spark, indexPath, queryId, batchId) {
-      root => fresh.select(col("text_sha"))
-        .write.mode("overwrite").parquet(root)
+    ledgeredBatch(spark, indexPath, queryId, batchId, sink) {
+      val index =
+        if (hasData(spark, indexPath)) spark.read.parquet(indexPath)
+        else Seq.empty[String].toDF("text_sha")
+      Dedup.incrementalNewByDigest(index, batch, textCol, idCol)
+    } { fresh =>
+      IngestLedger.exactlyOnceAppend(spark, indexPath, queryId, batchId) {
+        root => fresh.select(col("text_sha"))
+          .write.mode("overwrite").parquet(root)
+      }
     }
   }
 
@@ -409,17 +416,10 @@ object StreamingPipelines {
     * restarts. */
   def exportWarcZstStream(docs: DataFrame, outPath: String,
       checkpointLocation: Option[String] = None,
-      dict: Array[Byte] = null)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        exportWarcZstBatch(batch, batchId, outPath, dict); ()
-      }
-    checkpointLocation.foreach(p =>
-      writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      dict: Array[Byte] = null): StreamingQuery =
+    startForeachBatch(docs, checkpointLocation) { (batch, batchId) =>
+      exportWarcZstBatch(batch, batchId, outPath, dict); ()
+    }
 
   /** Streaming incremental NEAR-dup ingest — the near-dup twin of
     * [[ingestNewStream]], looped around
@@ -440,9 +440,8 @@ object StreamingPipelines {
     *
     * Exactly-once: foreachBatch is at-least-once on retries, so the
     * whole batch body is guarded by the index's [[IngestLedger]]
-    * (queryId, batchId) high-water mark — the idempotent pattern
-    * [[graft.operators.Dedup.appendToLshIndex]]'s contract prescribes —
-    * and the append itself is a STAGED COMMIT
+    * (queryId, batchId) high-water mark, and the append
+    * ([[graft.operators.Dedup.appendToLshIndex]]) is a STAGED COMMIT
     * ([[IngestLedger.exactlyOnceAppend]]: stage → manifest → resumable
     * per-file moves → mark), so even a crash inside the append cannot
     * double-apply. A replayed batch whose append already committed
@@ -455,65 +454,37 @@ object StreamingPipelines {
       indexPath: String, threshold: Double = 0.8, shingleK: Int = 3,
       numHashes: Int = 64, bands: Int = 16,
       checkpointLocation: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        nearDupIngestBatch(batch, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
-          indexPath, textCol, idCol, threshold, shingleK, numHashes,
-          bands)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startForeachBatch(docs, checkpointLocation) { (batch, batchId) =>
+      nearDupIngestBatch(batch, batchId,
+        IngestLedger.currentQueryId(batch.sparkSession),
+        indexPath, textCol, idCol, threshold, shingleK, numHashes,
+        bands)(sink)
+    }
 
   /** One micro-batch of [[ingestNearDupStream]] — public so the
     * replay-idempotence spec can apply the SAME (queryId, batchId) twice
-    * and pin byte-identical index contents and probe results. */
+    * and pin byte-identical index contents and probe results. With no
+    * band relation yet, the sink gets an empty pair frame. */
   def nearDupIngestBatch(batch: DataFrame, batchId: Long, queryId: String,
       indexPath: String, textCol: String, idCol: String,
       threshold: Double, shingleK: Int, numHashes: Int, bands: Int)
       (sink: (DataFrame, Long) => Unit): Unit = {
-    import org.apache.spark.sql.types._
-    val spark = batch.sparkSession
-    if (IngestLedger.alreadyApplied(spark, indexPath, queryId, batchId))
-      return // replay of a fully-applied batch: sink ran, index absorbed
-    if (IngestLedger.resumePending(spark, indexPath, queryId, batchId))
-      return // crashed between manifest and mark: probe + sink already
-             // ran (they precede staging) — only the moves were owed
-    val index = graft.operators.Dedup.LshIndex(indexPath, shingleK,
-      numHashes, bands)
-    val hPath = new org.apache.hadoop.fs.Path(s"$indexPath/bands")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pairs =
-      if (fs.exists(hPath))
-        graft.operators.Dedup
-          .lshProbeNearDup(index, batch, textCol, idCol, threshold)
-          .pin()
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        // id columns typed from the ACTUAL batch schema so the sink
-        // sees one consistent schema across the empty first batch
-        // and every later one
-        StructType(Seq(
-          StructField("a", batch.schema(idCol).dataType),
-          StructField("b", batch.schema(idCol).dataType),
-          StructField("jaccard", DoubleType))))
-    sink(pairs, batchId)
-    IngestLedger.exactlyOnceAppend(spark, indexPath, queryId, batchId) {
-      root => graft.operators.Dedup.stageLshAppend(index, batch, textCol,
-        idCol, root)
-    }
+    val index = Dedup.LshIndex(indexPath, shingleK, numHashes, bands)
+    ledgeredBatch(batch.sparkSession, indexPath, queryId, batchId, sink) {
+      if (hasData(batch.sparkSession, s"$indexPath/bands"))
+        Dedup.lshProbeNearDup(index, batch, textCol, idCol, threshold)
+      else Dedup.emptyPairs(batch, idCol)
+    }(_ => Dedup.appendToLshIndex(index, batch, textCol, idCol, queryId,
+      batchId))
   }
 
   /** [[ingestNearDupStream]] over a BUCKETED index (round 12) — the
     * daily-ingest loop finally gets BOTH halves of the 100 TB story:
     * partition-pruned probes ([[graft.operators.Dedup
     * .lshProbeNearDupBucketed]]) AND bucket-aligned incremental
-    * appends ([[graft.operators.Dedup.stageLshAppendBucketed]] through
-    * the ledger's staged commit), where round 11 forced a choice
+    * appends ([[graft.operators.Dedup.appendToLshIndexBucketed]]
+    * through the ledger's staged commit), where round 11 forced a choice
     * between pruned probes (bucketed, rebuild-to-refresh) and
     * incremental appends (flat, corpus-scan probes). Same exactly-once
     * contract as the flat loop; compact per-batch bucket files with
@@ -522,19 +493,13 @@ object StreamingPipelines {
       idCol: String, indexPath: String, threshold: Double = 0.8,
       shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
       nBuckets: Int = 64, checkpointLocation: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bucketedNearDupIngestBatch(batch, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
-          indexPath, textCol, idCol, threshold, shingleK, numHashes,
-          bands, nBuckets)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startForeachBatch(docs, checkpointLocation) { (batch, batchId) =>
+      bucketedNearDupIngestBatch(batch, batchId,
+        IngestLedger.currentQueryId(batch.sparkSession),
+        indexPath, textCol, idCol, threshold, shingleK, numHashes,
+        bands, nBuckets)(sink)
+    }
 
   /** One micro-batch of [[ingestNearDupStreamBucketed]] — public for
     * the replay/parity specs (the [[nearDupIngestBatch]] pattern). */
@@ -542,83 +507,46 @@ object StreamingPipelines {
       queryId: String, indexPath: String, textCol: String, idCol: String,
       threshold: Double, shingleK: Int, numHashes: Int, bands: Int,
       nBuckets: Int)(sink: (DataFrame, Long) => Unit): Unit = {
-    import org.apache.spark.sql.types._
-    val spark = batch.sparkSession
-    if (IngestLedger.alreadyApplied(spark, indexPath, queryId, batchId))
-      return
-    if (IngestLedger.resumePending(spark, indexPath, queryId, batchId))
-      return
-    val index = graft.operators.Dedup.LshIndexBucketed(indexPath,
-      shingleK, numHashes, bands, nBuckets)
-    val hPath = new org.apache.hadoop.fs.Path(s"$indexPath/bands")
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pairs =
-      if (fs.exists(hPath))
-        graft.operators.Dedup.lshProbeNearDupBucketed(index, batch,
-          textCol, idCol, threshold).pin()
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("a", batch.schema(idCol).dataType),
-          StructField("b", batch.schema(idCol).dataType),
-          StructField("jaccard", DoubleType))))
-    sink(pairs, batchId)
-    IngestLedger.exactlyOnceAppend(spark, indexPath, queryId, batchId) {
-      root => graft.operators.Dedup.stageLshAppendBucketed(index, batch,
-        textCol, idCol, root)
-    }
+    val index = Dedup.LshIndexBucketed(indexPath, shingleK, numHashes,
+      bands, nBuckets)
+    ledgeredBatch(batch.sparkSession, indexPath, queryId, batchId, sink) {
+      if (hasData(batch.sparkSession, s"$indexPath/bands"))
+        Dedup.lshProbeNearDupBucketed(index, batch, textCol, idCol,
+          threshold)
+      else Dedup.emptyPairs(batch, idCol)
+    }(_ => Dedup.appendToLshIndexBucketed(index, batch, textCol, idCol,
+      queryId, batchId))
   }
 
   /** [[ingestNewStream]] over a BUCKETED digest index — pruned
-    * anti-join probes + bucket-aligned appends, ledger-guarded
-    * (an exactly-once upgrade over the flat loop's bare append).
-    * The append stages the BATCH's digests (not just the fresh
-    * survivors): duplicate digests are benign for the anti-join — any
-    * match suppresses — and keeping the stage a pure function of the
-    * batch keeps replays trivially idempotent. */
+    * anti-join probes + bucket-aligned appends, ledger-guarded like
+    * the flat loop. The append stages the BATCH's digests (not just the
+    * fresh survivors): duplicate digests are benign for the anti-join —
+    * any match suppresses — and keeping the stage a pure function of
+    * the batch keeps replays trivially idempotent. */
   def ingestNewStreamBucketed(docs: DataFrame, textCol: String,
       idCol: String, indexPath: String, nBuckets: Int = 256,
       checkpointLocation: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bucketedNewIngestBatch(batch, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
-          indexPath, textCol, idCol, nBuckets)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startForeachBatch(docs, checkpointLocation) { (batch, batchId) =>
+      bucketedNewIngestBatch(batch, batchId,
+        IngestLedger.currentQueryId(batch.sparkSession),
+        indexPath, textCol, idCol, nBuckets)(sink)
+    }
 
   /** One micro-batch of [[ingestNewStreamBucketed]] — public for the
-    * replay/parity specs. */
+    * replay/parity specs. With no bucket data yet, every distinct
+    * digest of the batch survives. */
   def bucketedNewIngestBatch(batch: DataFrame, batchId: Long,
       queryId: String, indexPath: String, textCol: String, idCol: String,
       nBuckets: Int)(sink: (DataFrame, Long) => Unit): Unit = {
-    val spark = batch.sparkSession
-    if (IngestLedger.alreadyApplied(spark, indexPath, queryId, batchId))
-      return
-    if (IngestLedger.resumePending(spark, indexPath, queryId, batchId))
-      return
-    val index = graft.operators.Dedup.DigestIndexBucketed(indexPath,
-      nBuckets)
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(hPath) && fs.listStatus(hPath)
-      .exists(_.getPath.getName.startsWith("bucket="))
-    val fresh =
-      if (hasData)
-        graft.operators.Dedup.incrementalNewBucketed(index, batch,
-          textCol, idCol).pin()
-      else graft.operators.Dedup.exactByHash(batch, textCol, idCol)
-        .pin()
-    sink(fresh, batchId)
-    IngestLedger.exactlyOnceAppend(spark, indexPath, queryId, batchId) {
-      root => graft.operators.Dedup.stageDigestAppendBucketed(index,
-        batch, textCol, root)
-    }
+    val index = Dedup.DigestIndexBucketed(indexPath, nBuckets)
+    ledgeredBatch(batch.sparkSession, indexPath, queryId, batchId, sink) {
+      if (hasData(batch.sparkSession, indexPath))
+        Dedup.incrementalNewBucketed(index, batch, textCol, idCol)
+      else Dedup.exactByHash(batch, textCol, idCol)
+    }(_ => Dedup.appendToDigestIndexBucketed(index, batch, textCol,
+      queryId, batchId))
   }
 
   /** Streaming IVF-PQ INGEST — the ANN-serving loop around
@@ -648,60 +576,35 @@ object StreamingPipelines {
     * `nprobe/nlist` of the CODES column for the coarse pass and appends
     * one batch of coded rows — no rewrite, no corpus shuffle. */
   def ingestIvfPqStream(vectors: DataFrame,
-      index: graft.operators.Similarity.IvfPqIndex, k: Int = 5,
+      index: Similarity.IvfPqIndex, k: Int = 5,
       nprobe: Int = 4, overfetch: Int = 4, vecCol: String = "embedding",
       idCol: String = "vec_id", checkpointLocation: Option[String] = None)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ivfPqIngestBatch(batch, batchId,
-          IngestLedger.currentQueryId(batch.sparkSession),
-          index, k, nprobe, overfetch, vecCol, idCol)(sink)
-      }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startForeachBatch(vectors, checkpointLocation) { (batch, batchId) =>
+      ivfPqIngestBatch(batch, batchId,
+        IngestLedger.currentQueryId(batch.sparkSession),
+        index, k, nprobe, overfetch, vecCol, idCol)(sink)
+    }
 
   /** One micro-batch of [[ingestIvfPqStream]] — public so the
     * replay-idempotence spec can apply the SAME (queryId, batchId) twice
-    * and pin byte-identical index contents and probe results. */
+    * and pin byte-identical index contents and probe results. An EMPTY
+    * batch skips the probe: the sink gets the empty batch projected to
+    * the hit schema, and its (empty) append still advances the mark, so
+    * its replay no-ops too. */
   def ivfPqIngestBatch(batch: DataFrame, batchId: Long, queryId: String,
-      index: graft.operators.Similarity.IvfPqIndex, k: Int, nprobe: Int,
+      index: Similarity.IvfPqIndex, k: Int, nprobe: Int,
       overfetch: Int, vecCol: String, idCol: String)
-      (sink: (DataFrame, Long) => Unit): Unit = {
-    import org.apache.spark.sql.types._
-    val spark = batch.sparkSession
-    if (IngestLedger.alreadyApplied(spark, index.path, queryId, batchId))
-      return // replay of a fully-applied batch: sink ran, index absorbed
-    if (IngestLedger.resumePending(spark, index.path, queryId, batchId))
-      return // crashed between manifest and mark: finish-only
-    if (batch.isEmpty) {
-      // schema-stable empty result for the sink (same discipline as
-      // ingestNearDupStream's first-batch frame)
-      sink(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("query_id", batch.schema(idCol).dataType),
-          StructField("rank", IntegerType, nullable = false),
-          StructField("neighbor_id", batch.schema(idCol).dataType),
-          StructField("cosine", DoubleType)))), batchId)
-      // an empty batch mutates nothing — but still advance the mark so
-      // its replay (possible when the trigger committed no data) no-ops
-      IngestLedger.record(spark, index.path, queryId, batchId)
-    } else {
-      val hits = graft.operators.Similarity
-        .ivfPqTopKIndexed(index, batch, k, nprobe, overfetch,
-          vecCol, idCol)
-        .pin()
-      sink(hits, batchId)
-      IngestLedger.exactlyOnceAppend(spark, index.path, queryId, batchId) {
-        root => graft.operators.Similarity.stageIvfPqAppend(index, batch,
-          vecCol, idCol, root)
-      }
-    }
-  }
+      (sink: (DataFrame, Long) => Unit): Unit =
+    ledgeredBatch(batch.sparkSession, index.path, queryId, batchId, sink) {
+      if (batch.isEmpty)
+        batch.select(col(idCol).as("query_id"), lit(1).as("rank"),
+          col(idCol).as("neighbor_id"), lit(null).cast(DoubleType)
+            .as("cosine"))
+      else Similarity.ivfPqTopKIndexed(index, batch, k, nprobe, overfetch,
+        vecCol, idCol)
+    }(_ => Similarity.appendToIvfPqIndex(index, batch, vecCol, idCol,
+      queryId, batchId))
 
   /** Stream-stream INTERVAL join — the streaming twin of
     * `operators.RangeJoin`: each trigger event joins to the follow events
@@ -798,24 +701,18 @@ object StreamingPipelines {
   def mergeCdcStream(cdc: DataFrame, keyCol: String, versionCol: String,
       deletedCol: String, snapshotPath: String,
       checkpointLocation: Option[String] = None, nBuckets: Int = 64)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = cdc.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.dropDuplicates(Seq(keyCol, versionCol))
-        BucketedSnapshotStore.publish(spark, snapshotPath, batchId,
-            delta, Seq(keyCol), nBuckets) { (current, d) =>
-          graft.operators.Cdc
-            .mergeCdc(current, d, keyCol, versionCol, deletedCol)
-        }
-        sink(BucketedSnapshotStore.read(spark, snapshotPath)
-          .getOrElse(batch.filter(lit(false))), batchId)
+      (sink: (DataFrame, Long) => Unit): StreamingQuery =
+    startForeachBatch(cdc, checkpointLocation) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val delta = batch.dropDuplicates(Seq(keyCol, versionCol))
+      BucketedSnapshotStore.publish(spark, snapshotPath, batchId,
+          delta, Seq(keyCol), nBuckets) { (current, d) =>
+        graft.operators.Cdc
+          .mergeCdc(current, d, keyCol, versionCol, deletedCol)
       }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      sink(BucketedSnapshotStore.read(spark, snapshotPath)
+        .getOrElse(batch.filter(lit(false))), batchId)
+    }
 
   def followWithin(events: DataFrame, triggerType: String = "purchase",
       window_ : String = "1 hour", lateness: String = "10 minutes")
@@ -1019,25 +916,20 @@ object StreamingPipelines {
   def maintainEdgesStream(events: Dataset[NodeEvent], edgePath: String,
       horizonMs: Long = 24L * 3600 * 1000,
       checkpointLocation: Option[String] = None, nBuckets: Int = 64)
-      (sink: (DataFrame, Long) => Unit = (_, _) => ())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = transitionEdgesStream(events, horizonMs).toDF()
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val delta = batch.groupBy(col("src"), col("dst"))
-          .agg(count(lit(1)).as("w"))
-        BucketedSnapshotStore.publish(spark, edgePath, batchId, delta,
-            Seq("src", "dst"), nBuckets) { (current, d) =>
-          current.unionByName(d)
-            .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
-        }
-        sink(BucketedSnapshotStore.read(spark, edgePath)
-          .getOrElse(delta.filter(lit(false))), batchId)
+      (sink: (DataFrame, Long) => Unit = (_, _) => ()): StreamingQuery =
+    startForeachBatch(transitionEdgesStream(events, horizonMs).toDF(),
+        checkpointLocation) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val delta = batch.groupBy(col("src"), col("dst"))
+        .agg(count(lit(1)).as("w"))
+      BucketedSnapshotStore.publish(spark, edgePath, batchId, delta,
+          Seq("src", "dst"), nBuckets) { (current, d) =>
+        current.unionByName(d)
+          .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       }
-    checkpointLocation.foreach(p => writer.option("checkpointLocation", p))
-    writer.start()
-  }
+      sink(BucketedSnapshotStore.read(spark, edgePath)
+        .getOrElse(delta.filter(lit(false))), batchId)
+    }
 
   /** Periodic re-rank over the maintained edge snapshot: read the live
     * bucketed state ([[BucketedSnapshotStore.read]] — manifest + pointer

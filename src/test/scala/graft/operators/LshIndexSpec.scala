@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
+
+import LshIndexSpec.{bucketFilters, candsPlans}
 
 class LshIndexSpec extends SparkFunSuite {
 
@@ -101,21 +104,16 @@ class LshIndexSpec extends SparkFunSuite {
     // plan contract over a SMALL delta: both index scans carry a
     // NON-EMPTY partition filter on `bucket` (the PqSimSpec discipline).
     // Round 18: the probe pins its candidate stage, so the bands-side
-    // pruned scan lives in the candidate plan (lshProbeCandsPlan — the
-    // exact relation the probe executes) and the shingles-side pruned
-    // scan in the final plan.
+    // pruned scan lives in the candidate pin's plan (captured as the
+    // probe runs it) and the shingles-side pruned scan in the final plan.
     val tiny = c.limit(2).select(($"doc_id" + 5000L).as("doc_id"), $"text")
-    val probeDf = Dedup.lshProbeNearDupBucketed(bucketed, tiny, "text",
-      "doc_id", threshold = 0.6)
+    val (probeDf, candsPlan) = candsPlans(s, bucketed)(
+      Dedup.lshProbeNearDupBucketed(bucketed, tiny, "text", "doc_id",
+        threshold = 0.6))
     val plan = probeDf.queryExecution.executedPlan.toString
-    val candsPlan = Dedup.lshProbeCandsPlan(bucketed, tiny, "text",
-      "doc_id").queryExecution.executedPlan.toString
-    def bucketFilters(p: String): List[String] =
-      """PartitionFilters: \[[^\]]*\]""".r.findAllIn(p).toList
-        .filter(f => f.contains("bucket") && !f.contains("[]"))
     assert(bucketFilters(plan).nonEmpty,
       s"expected the pruned shingles scan in the probe plan:\n$plan")
-    assert(bucketFilters(candsPlan).nonEmpty,
+    assert(candsPlan.nonEmpty && candsPlan.forall(bucketFilters(_).nonEmpty),
       s"expected the pruned bands scan in the candidate plan:\n$candsPlan")
     // and an empty delta yields an empty, correctly-typed frame
     assert(Dedup.lshProbeNearDupBucketed(bucketed,
@@ -166,19 +164,17 @@ class LshIndexSpec extends SparkFunSuite {
     assert(got.nonEmpty && got == probe(full),
       "append must be indistinguishable from a fresh full build")
     // partition pruning survives the appended files (round 18: bands
-    // pruning asserted on the candidate plan, shingles on the final —
-    // see the probe's pinned-candidate comment)
+    // pruning asserted on the candidate pin's plan, shingles on the
+    // final — see the probe's pinned-candidate comment)
     val tiny = c.limit(2).select(($"doc_id" + 5000L).as("doc_id"), $"text")
-    val plan = Dedup.lshProbeNearDupBucketed(half, tiny, "text",
-      "doc_id", threshold = 0.6).queryExecution.executedPlan.toString
-    val candsPlan = Dedup.lshProbeCandsPlan(half, tiny, "text",
-      "doc_id").queryExecution.executedPlan.toString
-    def bucketFilters(p: String): List[String] =
-      """PartitionFilters: \[[^\]]*\]""".r.findAllIn(p).toList
-        .filter(f => f.contains("bucket") && !f.contains("[]"))
-    assert(bucketFilters(plan).nonEmpty && bucketFilters(candsPlan).nonEmpty,
+    val (probeDf, candsPlan) = candsPlans(s, half)(
+      Dedup.lshProbeNearDupBucketed(half, tiny, "text", "doc_id",
+        threshold = 0.6))
+    val plan = probeDf.queryExecution.executedPlan.toString
+    assert(bucketFilters(plan).nonEmpty && candsPlan.nonEmpty &&
+      candsPlan.forall(bucketFilters(_).nonEmpty),
       s"post-append probe must stay pruned on bucket: final=" +
-        s"${bucketFilters(plan)} cands=${bucketFilters(candsPlan)}")
+        s"${bucketFilters(plan)} cands=${candsPlan.map(bucketFilters)}")
     // bucketed compaction: one file per touched bucket, identical probe
     val compacted = Dedup.compactLshIndexBucketed(s, half,
       tmpPath("bapp_compact"))
@@ -326,18 +322,16 @@ class LshIndexSpec extends SparkFunSuite {
     assert(want.nonEmpty && probe(salted) == want,
       "salting must be invisible to probe results")
     // pruning holds over multi-file buckets (directories, not files;
-    // round 18: bands pruning asserted on the candidate plan)
+    // round 18: bands pruning asserted on the candidate pin's plan)
     val tiny = c.limit(2).select(($"doc_id" + 5000L).as("doc_id"), $"text")
-    val plan = Dedup.lshProbeNearDupBucketed(salted, tiny, "text",
-      "doc_id", threshold = 0.6).queryExecution.executedPlan.toString
-    val candsPlan = Dedup.lshProbeCandsPlan(salted, tiny, "text",
-      "doc_id").queryExecution.executedPlan.toString
-    def bucketFilters(p: String): List[String] =
-      """PartitionFilters: \[[^\]]*\]""".r.findAllIn(p).toList
-        .filter(f => f.contains("bucket") && !f.contains("[]"))
-    assert(bucketFilters(plan).nonEmpty && bucketFilters(candsPlan).nonEmpty,
+    val (probeDf, candsPlan) = candsPlans(s, salted)(
+      Dedup.lshProbeNearDupBucketed(salted, tiny, "text", "doc_id",
+        threshold = 0.6))
+    val plan = probeDf.queryExecution.executedPlan.toString
+    assert(bucketFilters(plan).nonEmpty && candsPlan.nonEmpty &&
+      candsPlan.forall(bucketFilters(_).nonEmpty),
       s"salted probe must stay pruned on bucket: final=" +
-        s"${bucketFilters(plan)} cands=${bucketFilters(candsPlan)}")
+        s"${bucketFilters(plan)} cands=${candsPlan.map(bucketFilters)}")
     // the digest index and the bucketed compactor take the same salt
     val dig = Dedup.buildDigestIndexBucketed(c, "text",
       tmpPath("salt_dig"), nBuckets = 8, filesPerBucket = 3)
@@ -390,24 +384,21 @@ class LshIndexSpec extends SparkFunSuite {
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val df = probe()
+      val (df, candsPlan) = candsPlans(s, bucketed)(probe())
       val got = df.orderBy($"a", $"b").collect().map(_.toString).toSeq
       assert(got == want,
         "shuffle fallback must answer to the same value oracle")
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange"),
         s"over-budget delta must not broadcast:\n$plan")
-      // round 18: bands pruning asserted on the candidate plan (the
-      // final plan reads the pinned candidate rows)
-      val candsPlan = Dedup.lshProbeCandsPlan(bucketed, delta, "text",
-        "doc_id").queryExecution.executedPlan.toString
-      def bucketFilters(p: String): List[String] =
-        """PartitionFilters: \[[^\]]*\]""".r.findAllIn(p).toList
-          .filter(f => f.contains("bucket") && !f.contains("[]"))
-      assert(bucketFilters(plan).nonEmpty &&
-        bucketFilters(candsPlan).nonEmpty,
+      // round 18: bands pruning asserted on the candidate pin's plan
+      // (the final plan reads the pinned candidate rows)
+      assert(bucketFilters(plan).nonEmpty && candsPlan.nonEmpty &&
+        candsPlan.forall(bucketFilters(_).nonEmpty),
         s"fallback must keep both pruned index scans: final=" +
-          s"${bucketFilters(plan)} cands=${bucketFilters(candsPlan)}")
+          s"${bucketFilters(plan)} cands=${candsPlan.map(bucketFilters)}")
+      assert(candsPlan.forall(!_.contains("BroadcastExchange")),
+        s"over-budget candidate join must not broadcast:\n$candsPlan")
       // the flat probe takes the same guard
       val dfFlat = probeFlat()
       val gotFlat = dfFlat.orderBy($"a", $"b").collect()
@@ -421,5 +412,46 @@ class LshIndexSpec extends SparkFunSuite {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
+  }
+}
+
+object LshIndexSpec {
+
+  /** Non-empty `bucket` partition filters in a plan string. */
+  def bucketFilters(p: String): List[String] =
+    """PartitionFilters: \[[^\]]*\]""".r.findAllIn(p).toList
+      .filter(f => f.contains("bucket") && !f.contains("[]"))
+
+  /** Runs `probe` and returns it with the executed plans of the pins it
+    * made over `index`'s band relation — the candidate relation
+    * [[Dedup.lshProbeNearDupBucketed]] runs. `Dataset.localCheckpoint`
+    * (and `checkpoint`) reports to QueryExecutionListeners even when
+    * lazy, so the plan captured is the one the probe executes, not a
+    * second construction of it. */
+  def candsPlans(spark: SparkSession, index: Dedup.LshIndexBucketed)
+      (probe: => DataFrame): (DataFrame, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName.toLowerCase.endsWith("checkpoint")) {
+          plans.add(qe.executedPlan.toString); ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = probe
+      def bandScans: Seq[String] =
+        plans.asScala.filter(_.contains(s"${index.path}/bands")).toSeq
+      // listener delivery is async — poll for the candidate pin
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (bandScans.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      (df, bandScans)
+    } finally spark.listenerManager.unregister(listener)
   }
 }

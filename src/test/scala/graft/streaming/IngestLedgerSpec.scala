@@ -150,20 +150,16 @@ class IngestLedgerSpec extends SparkFunSuite {
     assert(s.read.parquet(s"$bDir/bands").collect()
       .map(_.toString).sorted.toSeq == before)
     // post-append probe stays partition-pruned (round 18: bands-side
-    // pruning lives in the probe's pinned candidate plan — assert it
-    // via the lshProbeCandsPlan spec hook, shingles on the final plan)
+    // pruning lives in the probe's pinned candidate plan — captured as
+    // the probe runs it — shingles on the final plan)
+    import graft.operators.LshIndexSpec.{bucketFilters, candsPlans}
     val idx = graft.operators.Dedup.LshIndexBucketed(bDir, 3, 64, 16, 16)
-    val probe = graft.operators.Dedup.lshProbeNearDupBucketed(
-      idx, docs(0, 2).toDF("doc_id", "text"), "text", "doc_id", 0.6)
-    val cands = graft.operators.Dedup.lshProbeCandsPlan(
-      idx, docs(0, 2).toDF("doc_id", "text"), "text", "doc_id")
-    def bucketFilters(p: String): List[String] =
-      """PartitionFilters: \[[^\]]*\]""".r.findAllIn(p).toList
-        .filter(f => f.contains("bucket") && !f.contains("[]"))
+    val (probe, cands) = candsPlans(s, idx)(
+      graft.operators.Dedup.lshProbeNearDupBucketed(
+        idx, docs(0, 2).toDF("doc_id", "text"), "text", "doc_id", 0.6))
     assert(bucketFilters(
         probe.queryExecution.executedPlan.toString).nonEmpty &&
-      bucketFilters(
-        cands.queryExecution.executedPlan.toString).nonEmpty)
+      cands.nonEmpty && cands.forall(bucketFilters(_).nonEmpty))
   }
 
   test("BUCKETED exact-dedup ingest: survivors match the flat digest " +
@@ -253,87 +249,174 @@ class IngestLedgerSpec extends SparkFunSuite {
     assert(s.read.parquet(dir).where("doc_id = 99").count() == 1)
   }
 
+  /** One ledgered ingest loop under the crash test: `seed` writes the
+    * index state a batch 1 runs against, `run` applies one batch of the
+    * loop's batch function as query "qc", `stage` is the loop's append
+    * stage writer, and `rows` reads the live index's rows. */
+  private case class Loop(name: String, b1: org.apache.spark.sql.DataFrame,
+      seed: String => Unit,
+      run: (String, org.apache.spark.sql.DataFrame, Long, () => Unit) => Unit,
+      stage: (String, org.apache.spark.sql.DataFrame, String) => Unit,
+      rows: String => Seq[String])
+
+  private def vec(id: Long): Array[Float] = {
+    val c = (id % 3).toInt
+    Array.tabulate(8)(p =>
+      (if (p % 3 == c) 1.0f else 0.05f) + 0.01f * ((id * 7 + p) % 5))
+  }
+
+  private def vecFrame(ids: Seq[Long]) = {
+    val s = spark
+    import s.implicits._
+    ids.map(i => (i, vec(i))).toDF("vec_id", "embedding")
+  }
+
   test("staged-commit appends: a crash at ANY point either fully " +
       "re-runs (pre-manifest) or only finishes (post-manifest, even " +
       "mid-move) — the index is never double-applied") {
     val s = spark
     import s.implicits._
+    import graft.operators.{Dedup, Similarity}
     val base = "the quick brown fox jumps over the lazy dog again today"
-    def newIndex(dir: String, rows: Seq[(Long, String)]): Unit =
-      StreamingPipelines.nearDupIngestBatch(rows.toDF("doc_id", "text"),
-        0L, "qc", dir, "text", "doc_id", 0.6, 3, 64, 16) { (_, _) => () }
-    def indexRows(dir: String): Seq[String] =
-      (s.read.parquet(s"$dir/bands").collect().map(_.toString).sorted ++
-        s.read.parquet(s"$dir/shingles").collect().map(_.toString).sorted)
-        .toSeq
-    val seed = Seq(1L -> base, 2L -> "other engine text")
-    val b1 = Seq(11L -> (base + " with tail drift"))
-    // reference: the same two batches applied cleanly
-    val ref = tmp("graft_crash_ref") + "/lsh"
-    newIndex(ref, seed)
-    var refSink = 0
-    StreamingPipelines.nearDupIngestBatch(b1.toDF("doc_id", "text"), 1L,
-      "qc", ref, "text", "doc_id", 0.6, 3, 64, 16) { (_, _) => refSink += 1 }
-    assert(refSink == 1)
-    // crash point A: staged but NO manifest — replay must fully re-run
-    val dirA = tmp("graft_crash_a") + "/lsh"
-    newIndex(dirA, seed)
-    val rootA = new org.apache.hadoop.fs.Path(dirA)
-    val tokA = IngestLedger.tokenOf("qc", 1L)
-    val idxA = graft.operators.Dedup.LshIndex(dirA, 3, 64, 16)
-    graft.operators.Dedup.stageLshAppend(idxA, b1.toDF("doc_id", "text"),
-      "text", "doc_id", IngestLedger.stagingRoot(rootA, tokA).toString)
-    var sinkA = 0
-    StreamingPipelines.nearDupIngestBatch(b1.toDF("doc_id", "text"), 1L,
-      "qc", dirA, "text", "doc_id", 0.6, 3, 64, 16) { (_, _) => sinkA += 1 }
-    assert(sinkA == 1, "pre-manifest crash: the batch body re-runs")
-    assert(indexRows(dirA) == indexRows(ref),
-      "pre-manifest crash: exactly one application")
-    // crash point B: manifest written, moves PARTIALLY done — replay
-    // must finish WITHOUT re-running probe/sink or re-staging
-    val dirB = tmp("graft_crash_b") + "/lsh"
-    newIndex(dirB, seed)
-    val rootB = new org.apache.hadoop.fs.Path(dirB)
-    val tokB = IngestLedger.tokenOf("qc", 1L)
-    val idxB = graft.operators.Dedup.LshIndex(dirB, 3, 64, 16)
-    graft.operators.Dedup.stageLshAppend(idxB, b1.toDF("doc_id", "text"),
-      "text", "doc_id", IngestLedger.stagingRoot(rootB, tokB).toString)
-    val filesB = IngestLedger.listDataFiles(s,
-      IngestLedger.stagingRoot(rootB, tokB))
-    assert(filesB.nonEmpty)
-    BucketedSnapshotStore.atomicWrite(s,
-      IngestLedger.manifestPath(rootB, tokB), filesB.mkString("\n"))
-    IngestLedger.completeMoves(s, rootB, tokB, filesB.take(1)) // mid-move
-    var sinkB = 0
-    StreamingPipelines.nearDupIngestBatch(b1.toDF("doc_id", "text"), 1L,
-      "qc", dirB, "text", "doc_id", 0.6, 3, 64, 16) { (_, _) => sinkB += 1 }
-    assert(sinkB == 0,
-      "post-manifest crash: probe/sink already ran — finish-only")
-    assert(indexRows(dirB) == indexRows(ref),
-      "post-manifest crash: exactly one application")
-    assert(IngestLedger.alreadyApplied(s, dirB, "qc", 1L),
-      "the finish path must advance the mark")
-    val fsB = rootB.getFileSystem(s.sparkContext.hadoopConfiguration)
-    assert(!fsB.exists(IngestLedger.manifestPath(rootB, tokB)) &&
-      !fsB.exists(IngestLedger.stagingRoot(rootB, tokB)),
-      "the finish path must clean up staging")
-    // and a FURTHER replay of the finished batch is a plain no-op
-    StreamingPipelines.nearDupIngestBatch(b1.toDF("doc_id", "text"), 1L,
-      "qc", dirB, "text", "doc_id", 0.6, 3, 64, 16) { (_, _) => sinkB += 1 }
-    assert(sinkB == 0 && indexRows(dirB) == indexRows(ref))
+    val seedDocs = Seq(1L -> base, 2L -> "other engine text")
+      .toDF("doc_id", "text")
+    val b1 = Seq(11L -> (base + " with tail drift"), 12L -> base)
+      .toDF("doc_id", "text")
+    def read(path: String): Seq[String] =
+      s.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    def lshRows(dir: String) = read(s"$dir/bands") ++ read(s"$dir/shingles")
+    def textLoop(name: String,
+        run: (String, org.apache.spark.sql.DataFrame, Long, () => Unit)
+          => Unit,
+        stage: (String, org.apache.spark.sql.DataFrame, String) => Unit,
+        rows: String => Seq[String]) =
+      Loop(name, b1, dir => run(dir, seedDocs, 0L, () => ()), run, stage,
+        rows)
+    val pqBase = graft.operators.Similarity.buildIvfPqIndex(
+      vecFrame(0L until 24L), tmp("graft_crash_pq") + "/ivfpq",
+      nlist = 4, m = 4, ksub = 8)
+    val loops = Seq(
+      textLoop("flat near-dup",
+        (dir, b, id, onSink) => StreamingPipelines.nearDupIngestBatch(b,
+          id, "qc", dir, "text", "doc_id", 0.6, 3, 64, 16)((_, _) =>
+          onSink()),
+        (dir, b, root) => Dedup.stageLshAppend(
+          Dedup.LshIndex(dir, 3, 64, 16), b, "text", "doc_id", root),
+        lshRows),
+      textLoop("bucketed near-dup",
+        (dir, b, id, onSink) => StreamingPipelines
+          .bucketedNearDupIngestBatch(b, id, "qc", dir, "text", "doc_id",
+            0.6, 3, 64, 16, 16)((_, _) => onSink()),
+        (dir, b, root) => Dedup.stageLshAppendBucketed(
+          Dedup.LshIndexBucketed(dir, 3, 64, 16, 16), b, "text", "doc_id",
+          root),
+        lshRows),
+      textLoop("flat digest",
+        (dir, b, id, onSink) => StreamingPipelines.newIngestBatch(b, id,
+          "qc", dir, "text", "doc_id")((_, _) => onSink()),
+        (dir, b, root) => Dedup.incrementalNewByDigest(s.read.parquet(dir),
+            b, "text", "doc_id").select("text_sha")
+          .write.mode("overwrite").parquet(root),
+        read),
+      textLoop("bucketed digest",
+        (dir, b, id, onSink) => StreamingPipelines.bucketedNewIngestBatch(
+          b, id, "qc", dir, "text", "doc_id", 16)((_, _) => onSink()),
+        (dir, b, root) => Dedup.stageDigestAppendBucketed(
+          Dedup.DigestIndexBucketed(dir, 16), b, "text", root),
+        read),
+      Loop("IVF-PQ", vecFrame(24L until 32L),
+        dir => {
+          val src = new org.apache.hadoop.fs.Path(pqBase.path)
+          val fs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
+          org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+            new org.apache.hadoop.fs.Path(dir), false,
+            s.sparkContext.hadoopConfiguration)
+          ()
+        },
+        (dir, b, id, onSink) => StreamingPipelines.ivfPqIngestBatch(b, id,
+          "qc", pqBase.copy(path = dir), 3, 4, 4, "embedding", "vec_id")(
+          (_, _) => onSink()),
+        (dir, b, root) => Similarity.stageIvfPqAppend(
+          pqBase.copy(path = dir), b, "embedding", "vec_id", root),
+        read))
+    loops.foreach { l =>
+      withClue(s"${l.name}: ") {
+        def fresh(tag: String): String = {
+          val dir = tmp(s"graft_crash_$tag") + "/idx"
+          l.seed(dir)
+          dir
+        }
+        def applyB1(dir: String): Int = {
+          var sinks = 0
+          l.run(dir, l.b1, 1L, () => sinks += 1)
+          sinks
+        }
+        def stageB1(dir: String): org.apache.hadoop.fs.Path = {
+          val sr = IngestLedger.stagingRoot(
+            new org.apache.hadoop.fs.Path(dir), IngestLedger.tokenOf("qc", 1L))
+          l.stage(dir, l.b1, sr.toString)
+          sr
+        }
+        // reference: the same two batches applied cleanly
+        val ref = fresh("ref")
+        assert(applyB1(ref) == 1)
+        val want = l.rows(ref)
+        // crash point A: staged but NO manifest — replay must fully re-run
+        val dirA = fresh("a")
+        stageB1(dirA)
+        assert(applyB1(dirA) == 1, "pre-manifest crash: the batch body re-runs")
+        assert(l.rows(dirA) == want,
+          "pre-manifest crash: exactly one application")
+        // crash point B: manifest written, moves PARTIALLY done — replay
+        // must finish WITHOUT re-running probe/sink or re-staging
+        val dirB = fresh("b")
+        val rootB = new org.apache.hadoop.fs.Path(dirB)
+        val tokB = IngestLedger.tokenOf("qc", 1L)
+        val filesB = IngestLedger.listDataFiles(s, stageB1(dirB))
+        assert(filesB.nonEmpty)
+        BucketedSnapshotStore.atomicWrite(s,
+          IngestLedger.manifestPath(rootB, tokB), filesB.mkString("\n"))
+        IngestLedger.completeMoves(s, rootB, tokB, filesB.take(1)) // mid-move
+        assert(applyB1(dirB) == 0,
+          "post-manifest crash: probe/sink already ran — finish-only")
+        assert(l.rows(dirB) == want,
+          "post-manifest crash: exactly one application")
+        assert(IngestLedger.alreadyApplied(s, dirB, "qc", 1L),
+          "the finish path must advance the mark")
+        val fsB = rootB.getFileSystem(s.sparkContext.hadoopConfiguration)
+        assert(!fsB.exists(IngestLedger.manifestPath(rootB, tokB)) &&
+          !fsB.exists(IngestLedger.stagingRoot(rootB, tokB)),
+          "the finish path must clean up staging")
+        // and a FURTHER replay of the finished batch is a plain no-op
+        assert(applyB1(dirB) == 0 && l.rows(dirB) == want)
+      }
+    }
+  }
+
+  test("appendToIvfIndex: an anonymous caller's repeated batch lands " +
+      "twice and leaves no ledger bookkeeping") {
+    val s = spark
+    val dir = tmp("graft_ledger_ivf") + "/ivf"
+    val idx = graft.operators.Similarity.buildIvfIndex(
+      vecFrame(0L until 24L), dir, nlist = 4)
+    val delta = vecFrame(100L until 106L)
+    graft.operators.Similarity.appendToIvfIndex(idx, delta)
+    graft.operators.Similarity.appendToIvfIndex(idx, delta)
+    def ids(): Seq[Long] = s.read.parquet(dir).select("id").collect()
+      .map(_.getLong(0)).toSeq.sorted
+    assert(ids() == ((0L until 24L) ++ (100L until 106L) ++
+      (100L until 106L)).sorted, "both anonymous copies must land")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).filter(_.startsWith("_ingest")).isEmpty,
+      "anonymous appends leave no _ingest_staging or _ingest_hwm")
   }
 
   test("IVF-PQ ingest: replaying an applied (queryId, batchId) no-ops " +
       "— no duplicate vectors, top-k slots stay correct") {
     val s = spark
-    import s.implicits._
-    def vec(id: Long): Array[Float] = {
-      val c = (id % 3).toInt
-      Array.tabulate(8)(p =>
-        (if (p % 3 == c) 1.0f else 0.05f) + 0.01f * ((id * 7 + p) % 5))
-    }
-    def frame(ids: Seq[Long]) = ids.map(i => (i, vec(i)))
-      .toDF("vec_id", "embedding")
+    def frame(ids: Seq[Long]) = vecFrame(ids)
     val root = tmp("graft_ledger_pq")
     val idx = graft.operators.Similarity.buildIvfPqIndex(
       frame(0L until 24L), s"$root/ivfpq", nlist = 4, m = 4, ksub = 8)
